@@ -7,7 +7,7 @@ import org.apache.spark.sql.types._
 import graft.config.ConnectProps
 import graft.operators.{AllPairs, Dedup, EntityResolution, Expectations, FuzzyJoin, HeavyHitters, IncrementalPipeline, LinkGraph, Merge, Multimodal, NgramLm, Phonetic, Scd2, Similarity, TextAnalysis, UrlOps}
 import graft.sources.{Snapshots, Tables}
-import graft.transforms.{DropField, ExtendedHoistField, JsonOps, StructuredToJsonString}
+import graft.transforms.{DropField, ExtendedHoistField, StructuredToJsonString}
 
 /** Driver contract: one demonstration query per implemented operator
   * (SURVEY.md §2 + the LLM-pipeline extensions), each with a DuckDB

@@ -16,8 +16,11 @@ import graft.model.Envelope
   *    pure Column ops, whole-stage codegen, lets Catalyst prune unread
   *    parquet columns underneath);
   *  - string column with `schemaless` unset/true → JSON-object rewrite
-  *    ([[JsonOps.dropJson]]), mirroring the schemaless-Map path
-  *    (`DropField.java:67-82`);
+  *    ([[graft.functions.JsonDropFields]]), mirroring the schemaless-Map
+  *    path (`DropField.java:67-82`): a codegen'd expression over a
+  *    one-pass byte kernel whose output matches a Jackson tree round trip
+  *    (contract on [[graft.functions.JsonStringOps]]); a non-object JSON
+  *    value throws, like the reference's `requireMap`;
   *  - empty `fields` list (the reference's default, `DropField.java:27-28`)
   *    → identity;
   *  - any other column type → error (the reference's `requireStruct` /
@@ -46,8 +49,6 @@ case class DropField(
       case st: StructType =>
         df.withColumn(targetCol, NestedOps.dropFieldsCol(col(targetCol), st, paths))
       case StringType if schemaless.getOrElse(true) =>
-        // native codegen'd Expression, not a ScalaUDF (JsonOps keeps the
-        // UDF flavor for comparison/tests)
         df.withColumn(targetCol,
           graft.functions.JsonDropFields(col(targetCol), fields))
       case other => throw new IllegalArgumentException(

@@ -20,7 +20,8 @@ import graft.model.Envelope
   *    of the reference's data-dependent value omission
   *    (`ExtendedHoistField.java:132-148`; divergence doc SURVEY.md §7.5.2);
   *  - string column with `schemaless` unset/true: JSON rewrite
-  *    ([[JsonOps.hoistJson]]) — empty keep-list wraps anything (even bare
+  *    ([[graft.functions.JsonHoistField]], the same one-pass kernel as the
+  *    schemaless drop) — empty keep-list wraps anything (even bare
   *    primitives, `ExtendedHoistField.java:76-79`), non-empty keep-list
   *    requires a JSON object (`ExtendedHoistField.java:51-60`), inner
   *    object genuinely omitted when empty (`ExtendedHoistField.java:94-96`);

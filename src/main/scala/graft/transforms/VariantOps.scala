@@ -38,7 +38,7 @@ object VariantOps {
     * `map<string,variant>` entries re-runs the whole parse→cast pipeline —
     * Catalyst's subexpression elimination is conditional-branch-
     * conservative and does not hoist across `when`/`otherwise` arms
-    * (measured on hoist_variant at sf0.1, `tools/VariantProbe`).
+    * (measured on hoist_variant at sf0.1; SURVEY.md, r7 variant profiling).
     * Implementation: a single-element higher-order `transform`. (The
     * cleaner `With`/CommonExpressionRef builder cannot be constructed from
     * the Column API — the ref snapshots its dataType before resolution.
@@ -79,7 +79,7 @@ object VariantOps {
     * rebuilt; sibling subtrees pass through as opaque variant values
     * (never re-parsed). Reference parity on the edges: a missing leaf is
     * a no-op; a path that crosses a NON-OBJECT intermediate is a no-op
-    * too (`JsonStringOps.dropRec` skips non-object children) — only the
+    * too (the JSON-string drop skips non-object children) — only the
     * ROOT must be an object, as in `DropField.java:56`.
     */
   def dropField(v: Column, path: Seq[String]): Column = {

@@ -90,14 +90,14 @@ class VariantOpsSpec extends SparkTestBase {
       val path = Seq.fill(1 + rnd.nextInt(3))(keys(rnd.nextInt(keys.size)))
       val (dv, dj) = df.select(
         VariantOps.dropFieldJson(v, path).as("dv"),
-        graft.transforms.JsonOps.dropJson(col("j"), Seq(path.mkString("."))).as("dj"))
+        graft.functions.JsonTreeOracle.dropJson(col("j"), Seq(path.mkString("."))).as("dj"))
         .as[(String, String)].head()
       assert(c(dv) == c(dj), s"iter $i drop $path on $json: variant=$dv jackson=$dj")
       // random hoist: keep 0-2 names (maybe absent), wrap rest
       val keep = rnd.shuffle(keys).take(rnd.nextInt(3))
       val (hv, hj) = df.select(
         VariantOps.hoistJson(v, "w", keep).as("hv"),
-        graft.transforms.JsonOps.hoistJson(col("j"), "w", keep).as("hj"))
+        graft.functions.JsonTreeOracle.hoistJson(col("j"), "w", keep).as("hj"))
         .as[(String, String)].head()
       assert(c(hv) == c(hj), s"iter $i hoist keep=$keep on $json: variant=$hv jackson=$hj")
     }
