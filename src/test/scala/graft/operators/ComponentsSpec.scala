@@ -52,9 +52,17 @@ class ComponentsSpec extends SparkTestBase with TimeLimits {
     // until the driver sat in BigInteger multiplication inside the stats
     // visitor for minutes per round. Rebuilding each checkpoint without
     // originStats keeps planning flat. This spec inflates the estimate
-    // through 8 nested self-joins (estimated size ~ bytes^256) and a
-    // 63-hop chain (≥ 4 loop iterations); pre-fix it effectively hangs,
-    // post-fix it completes in seconds.
+    // through 8 nested self-joins (a 738-digit sizeInBytes) over a 63-hop
+    // chain (>= 4 loop iterations).
+    //
+    // Each level ends in an eager localCheckpoint. Without it, the
+    // join's a-hash partitioning already satisfies the distinct, so no
+    // exchange separates the levels and all 8 run as one pipeline inside
+    // each task of Components' first action, every nested sort and hash
+    // aggregate holding its own 64 MB page: about 2 GB per task for 63
+    // rows, more than 4 concurrent tasks get from a shared test session.
+    // The checkpoint keeps originStats, so the estimate reaching
+    // Components is unchanged; each level runs in its own stages.
     val s = spark
     import s.implicits._
     var df = (0L until 63L).map(i => (i, i + 1)).toDF("a", "b")
@@ -63,16 +71,31 @@ class ComponentsSpec extends SparkTestBase with TimeLimits {
       val right = df.select(col("a").as("a2"), col("b").as("b2"))
       df = left.join(right, col("a") === col("a2"))
         .select(col("a"), col("b")).distinct()
+        .localCheckpoint(eager = true)
     }
     // failAfter, not an after-the-fact deadline check: a reintroduced
     // hang must FAIL here with this message, not stall the suite until
     // the global timeout (ADVICE r10)
-    val got = failAfter(Span(180, Seconds)) {
-      Components.connectedComponents(df, "a", "b",
+    val (got, estimate) = failAfter(Span(180, Seconds)) {
+      val out = Components.connectedComponents(df, "a", "b",
         maxIter = 20, localThreshold = 0L)
-        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+      (out.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap,
+        out.queryExecution.optimizedPlan.stats.sizeInBytes)
     }
     assert(got.size == 64 && got.values.forall(_ == 0L))
+    // What catches a lost scrub is this estimate, not the timeout: at
+    // this scale a compounding loop still finishes in seconds. The
+    // result is a Project over the LogicalRDD rebuilt without
+    // originStats, which estimates defaultSizeInBytes, and the Project
+    // keeps the row size (2 LONGs), so the result's estimate is exactly
+    // that. The check goes through a Boolean with a digit-count message
+    // because assert would print a compounded operand, thousands of
+    // digits, in full.
+    val bound = BigInt(spark.sessionState.conf.defaultSizeInBytes)
+    val flat = estimate <= bound
+    assert(flat, s"result size estimate has ${estimate.toString.length} " +
+      s"digits, above defaultSizeInBytes ($bound): the loop carried " +
+      "originStats forward")
   }
 
   test("clique and star shapes; ids need not be contiguous") {
