@@ -2,6 +2,7 @@ package graft.sources
 
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import org.apache.spark.sql.graftbridge.FileStats
 import org.apache.spark.sql.types.{ArrayType, ByteType, DataType, DateType, IntegerType, LongType, MapType, ShortType, StringType, StructType}
 
 /** Manifest-based snapshot storage: atomic commits, versioned reads
@@ -212,9 +213,9 @@ object Snapshots {
   // into O(1) filesystem calls: ONE hint read + ONE existence probe on
   // the hot path. On object stores LIST is the expensive, rate-limited
   // call — this was the last super-linear metadata cost on the
-  // commit/read path (ConsumerChainProbe measured the append wall
+  // commit/read path (a 10^4-commit probe measured the append wall
   // growing 130 -> 522 ms across 10^2 -> 10^4 commits from the LIST
-  // alone). The name cannot collide with version files (v\d{8}\.txt)
+  // alone; ledger in SURVEY.md, Appendix A r17/r18). The name cannot collide with version files (v\d{8}\.txt)
   // so every existing LIST-based reader skips it.
   private val HeadHintFile = "_head.hint"
   // the VACUUM FLOOR: the monotone max of every vacuum's keepFrom,
@@ -753,8 +754,8 @@ object Snapshots {
     * zero driver-side filesystem calls: no footer reads (schema is
     * committed) and no per-path FileStatus stats (lengths are
     * committed), which `spark.read.parquet(paths*)` pays once per file
-    * (~1.8 ms each — 18 s to plan a 10⁴-file snapshot, measured by
-    * SnapshotMetaProbe pre-fix). Pre-r15 lines (no length) or tables
+    * (~1.8 ms each — 18 s to plan a 10⁴-file snapshot, measured by the
+    * r15 file-count probe before the fix; ledger in SURVEY.md). Pre-r15 lines (no length) or tables
     * without a schema header fall back to the stock reader.
     */
   private def scan(spark: SparkSession, table: String,
@@ -1037,7 +1038,7 @@ object Snapshots {
     */
   private val StatsMaxChars = 64
 
-  private def truncateLower(s: String): String =
+  private[sources] def truncateLower(s: String): String =
     if (s.length <= StatsMaxChars) s else s.substring(0, StatsMaxChars)
 
   /** The smallest string strictly above `s` AND every extension of `s`
@@ -1063,49 +1064,35 @@ object Snapshots {
     None
   }
 
-  private def truncateUpper(s: String): Option[String] =
+  private[sources] def truncateUpper(s: String): Option[String] =
     if (s.length <= StatsMaxChars) Some(s)
     else bumpAbove(s.substring(0, StatsMaxChars))
 
-  private def renderStat(v: Any): String = v match {
-    case n: java.lang.Number => n.toString
-    case d: java.sql.Date => d.toLocalDate.toEpochDay.toString
-    case d: java.time.LocalDate => d.toEpochDay.toString
-    case s: String => s
-    case other => sys.error(s"unsupported stats value $other")
+  private def statKindOf(dt: DataType): Option[String] = dt match {
+    case ByteType | ShortType | IntegerType | LongType => Some("long")
+    case StringType => Some("string")
+    case DateType => Some("date")
+    case _ => None
   }
 
-  private def statKind(c: String, dt: DataType): String = dt match {
-    case ByteType | ShortType | IntegerType | LongType => "long"
-    case StringType => "string"
-    case DateType => "date"
-    case other => throw new IllegalArgumentException(
-      s"statsCols supports integral, string and date columns; $c is $other")
-  }
+  private[sources] def statKind(c: String, dt: DataType): String =
+    statKindOf(dt).getOrElse(throw new IllegalArgumentException(
+      s"statsCols supports integral, string and date columns; $c is $dt"))
 
-  /** Stage `df` as parquet under a fresh unique data directory and
-    * return its manifest lines (paths relative to the table root). With
-    * `statsCols` set, each line carries the file's per-column (min, max)
-    * — computed in ONE grouped pass over the just-staged files (driver
-    * traffic = one row per file, re-attached to the FS listing through a
-    * by-filename map, O(files)). A column with no non-null values in a
-    * file stays stats-less there and is conservatively kept by every
-    * pruned read.
-    */
   /** A file listing more distinct buckets than this renders no bucket
     * cell (conservatively always-touched): the cell must stay a few
     * dozen bytes — a file that interleaves many buckets gains nothing
     * from the stat anyway (cluster by the bucket expression to get 1-2
     * per file).
     */
-  private val BucketIdsMax = 16
+  private[sources] val BucketIdsMax = 16
 
   /** The bucket id of column `c` under `mod` — the expression whose
     * per-file DISTINCT values the manifest records. `xxhash64` is a
     * specified, seed-42-stable algorithm, so [[bucketOf]] can replay it
     * on the driver for planning.
     */
-  private def bucketExpr(c: String, mod: Int): Column = {
+  private[sources] def bucketExpr(c: String, mod: Int): Column = {
     import org.apache.spark.sql.functions.{col, lit, pmod, xxhash64}
     pmod(xxhash64(qcol(c)), lit(mod.toLong))
   }
@@ -1120,87 +1107,83 @@ object Snapshots {
       .eval(null).asInstanceOf[Long].toInt
   }
 
-  private def stage(spark: SparkSession, table: String, df: DataFrame,
-                    statsCols: Seq[String] = Nil,
-                    bucketCols: Map[String, Int] = Map.empty): Seq[String] = {
-    val commitId = java.util.UUID.randomUUID().toString
-    val rel = s"$DataDir/$commitId"
-    df.write.parquet(new Path(table, rel).toString)
+  /** Write `df` as parquet under the table-relative directory `rel` and
+    * return the per-file stats its write tasks gathered for `statsCols`
+    * and `bucketCols` ([[graftbridge.Bridge.writeParquet]]: one write
+    * job, no re-read of the written files).
+    */
+  private def writeStaged(table: String, rel: String, df: DataFrame,
+                          statsCols: Seq[String],
+                          bucketCols: Seq[(String, Int)]): Seq[FileStats] =
+    org.apache.spark.sql.graftbridge.Bridge.writeParquet(df,
+      new Path(table, rel).toString, statsCols,
+      bucketCols.map { case (c, m) => bucketExpr(c, m).cast("int") }, BucketIdsMax)
+
+  /** Stage `df` as parquet under a fresh unique data directory and
+    * return its manifest lines (paths relative to the table root). With
+    * `statsCols` or `bucketCols` set, each line also carries the file's
+    * row count, per stats column its (min, max) and NULL count, and per
+    * bucket column its distinct bucket ids — all gathered by the write
+    * tasks themselves ([[writeStaged]]) and attached to the FS listing
+    * by file name. A column with no non-null values in a file stays
+    * stats-less there and is conservatively kept by every pruned read; a
+    * zero-row file records `rc=0` and zero NULLs. Unsupported stats
+    * types and bucket mods fail before anything is written.
+    */
+  private[sources] def stage(spark: SparkSession, table: String, df: DataFrame,
+                             statsCols: Seq[String] = Nil,
+                             bucketCols: Map[String, Int] = Map.empty): Seq[String] = {
+    bucketCols.foreach { case (c, m) =>
+      require(m >= 2, s"bucketCols($c) needs mod >= 2, got $m") }
+    val kinds = statsCols.map(c => statKind(c, df.schema(c).dataType))
+    val rel = s"$DataDir/${java.util.UUID.randomUUID()}"
+    val bks = bucketCols.toSeq.sortBy(_._1)
+    val byName = writeStaged(table, rel, df, statsCols, bks)
+      .map(s => s.file -> s).toMap
     // the staging listing is the ONE place file lengths are observed;
     // they ride in every manifest line (`sz=` cell) so reads never stat
     val listed = fs(spark, table).listStatus(new Path(table, rel))
       .filter(s => s.isFile && s.getPath.getName.endsWith(".parquet"))
       .map(s => (s"$rel/${s.getPath.getName}", s.getLen)).sortBy(_._1).toSeq
     val rels = listed.map { case (r, len) => s"$r\t$SizeCell$len" }
-    // an empty staging set (0-partition df) has nothing to re-read: the
-    // schema-less parquet read below would fail, and there are no lines
-    // to attach stats to anyway
-    if ((statsCols.isEmpty && bucketCols.isEmpty) || rels.isEmpty) rels
-    else {
-      import org.apache.spark.sql.functions.{col, collect_set, count, input_file_name, lit, max, min}
-      bucketCols.foreach { case (c, m) =>
-        require(m >= 2, s"bucketCols($c) needs mod >= 2, got $m") }
-      val reread = spark.read.parquet(new Path(table, rel).toString)
-      val kinds = statsCols.map(c =>
-        c -> statKind(c, reread.schema(c).dataType)).toMap
-      val bks = bucketCols.toSeq.sortBy(_._1)
-      val aggs = statsCols.flatMap(c =>
-        Seq(min(qcol(c)).as(s"__lo_$c"), max(qcol(c)).as(s"__hi_$c"))) ++
-        bks.map { case (c, m) =>
-          collect_set(bucketExpr(c, m).cast("int")).as(s"__bk_$c") } ++
-        // row count + per-column non-null counts ride the same pass for
-        // free (nulls = rc - non-null, the IS [NOT] NULL pruning cell)
-        (count(lit(1)).as("__rc") +:
-          statsCols.map(c => count(qcol(c)).as(s"__nn_$c")))
-      val byName: Map[String, (Seq[(String, ColStat)], Seq[(String, BucketStat)], Long, Seq[(String, Long)])] =
-        reread
-          .groupBy(input_file_name().as("__f"))
-          .agg(aggs.head, aggs.tail: _*)
-          .collect()
-          .map { r =>
-            val stats = statsCols.zipWithIndex.flatMap { case (c, i) =>
-              val lo = r.get(1 + 2 * i)
-              val hi = r.get(2 + 2 * i)
-              if (lo == null || hi == null) None
-              else if (kinds(c) == "string")
-                // bounded manifest cells: truncated lower prefix + bumped
-                // upper bound (see truncateUpper); an un-bumpable upper
-                // drops the column's stats for this file (conservative)
-                truncateUpper(hi.asInstanceOf[String]).map(h =>
-                  c -> ColStat("string",
-                    truncateLower(lo.asInstanceOf[String]), h))
-              else Some(c -> ColStat(kinds(c), renderStat(lo), renderStat(hi)))
-            }
-            val base = 1 + 2 * statsCols.size
-            val bstats = bks.zipWithIndex.flatMap { case ((c, m), i) =>
-              val ids = r.getSeq[Int](base + i).sorted
-              if (ids.isEmpty || ids.size > BucketIdsMax) None
-              else Some(c -> BucketStat(m, ids))
-            }
-            val rc = r.getLong(base + bks.size)
-            val nulls = statsCols.zipWithIndex.map { case (c, j) =>
-              c -> (rc - r.getLong(base + bks.size + 1 + j))
-            }
-            r.getString(0).split('/').last -> ((stats, bstats, rc, nulls))
-          }.toMap
+    if (statsCols.isEmpty && bucketCols.isEmpty) rels
+    else
       rels.map { r =>
-        // a staged file absent from the grouped pass holds zero rows
-        // (an empty part file): its row count is a true 0 — and so is
-        // every per-column null count
-        val (cells, bcells, rc, ncells) = byName.getOrElse(
-          r.split('\t').head.split('/').last,
-          (Seq.empty[(String, ColStat)], Seq.empty[(String, BucketStat)], 0L,
-            statsCols.map(_ -> 0L)))
-        (r +: (s"$RowsCell$rc" +: (cells.map { case (c, st) =>
-          s"${enc(c)}=${st.kind}:${enc(st.lo)}:${enc(st.hi)}"
-        } ++ bcells.map { case (c, b) =>
-          s"$BucketCellPrefix${enc(c)}=${b.mod}:${b.ids.mkString(",")}"
-        } ++ ncells.map { case (c, n) =>
-          s"$NullsCellPrefix${enc(c)}=$n"
-        }))).mkString("\t")
+        // a staged file no write task reported holds zero rows
+        val st = byName.getOrElse(r.split('\t').head.split('/').last,
+          FileStats("", 0L, statsCols.map(_ => null),
+            statsCols.map(_ => null), statsCols.map(_ => 0L), bks.map(_ => None)))
+        val cells = statsCols.indices.flatMap { i =>
+          val (lo, hi) = (st.lo(i), st.hi(i))
+          if (lo == null) None
+          else if (kinds(i) == "string")
+            // bounded manifest cells: truncated lower prefix + bumped
+            // upper bound (see truncateUpper); an un-bumpable upper
+            // drops the column's stats for this file (conservative)
+            truncateUpper(hi.asInstanceOf[String]).map(h =>
+              statsCols(i) -> ColStat("string", truncateLower(lo.asInstanceOf[String]), h))
+          else Some(statsCols(i) -> ColStat(kinds(i), lo.toString, hi.toString))
+        }
+        val bcells = bks.zip(st.bucketIds).flatMap { case ((c, m), ids) =>
+          ids.map(c -> BucketStat(m, _)) }
+        val nulls = statsCols.zip(st.nonNull).map { case (c, nn) => c -> (st.rows - nn) }
+        renderLine(r, st.rows, cells, bcells, nulls)
       }
-    }
   }
+
+  /** A staged file's manifest line: its `path\tsz=` prefix, then the
+    * row count, stats, bucket and NULL-count cells.
+    */
+  private[sources] def renderLine(r: String, rows: Long, cells: Seq[(String, ColStat)],
+                                  bcells: Seq[(String, BucketStat)],
+                                  nulls: Seq[(String, Long)]): String =
+    (r +: (s"$RowsCell$rows" +: (cells.map { case (c, st) =>
+      s"${enc(c)}=${st.kind}:${enc(st.lo)}:${enc(st.hi)}"
+    } ++ bcells.map { case (c, b) =>
+      s"$BucketCellPrefix${enc(c)}=${b.mod}:${b.ids.mkString(",")}"
+    } ++ nulls.map { case (c, n) =>
+      s"$NullsCellPrefix${enc(c)}=$n"
+    }))).mkString("\t")
 
   /** Stage + wrap as a segment reference: the body contribution of one
     * commit — empty when nothing was staged (token-only commits).
@@ -1369,7 +1352,7 @@ object Snapshots {
     * the next append first publishes a [[checkpointMetadataCommit]].
     * Keeps the O(commits) body copy every append pays BOUNDED — at 10⁴
     * tiny commits the un-folded body is ~440 KB re-written per commit
-    * (ConsumerChainProbe) — without ever rewriting data. 256 references
+    * (SURVEY.md, Appendix A r16) — without ever rewriting data. 256 references
     * ≈ 11 KB body; the fold itself costs one read of every live
     * segment (O(files) driver-side lines), amortized to O(files/256)
     * per append.
@@ -2681,11 +2664,14 @@ object Snapshots {
     * merge batch, not a bounded erasure request), so no key ever reaches
     * the driver; the plan is found in two moves:
     *
-    *   1. stats pre-prune: ONE tiny aggregate takes the batch's global
-    *      (min, max) key band, and only head files whose committed
-    *      `keyCol` stats can overlap that band (plus every stats-less
-    *      file) become candidates — on a key-clustered table this alone
-    *      discards most of the table without reading a row;
+    *   1. stats pre-prune: ONE tiny aggregate (a 2-scalar driver
+    *      action) takes the batch's global (min, max) key band — inside
+    *      [[mergeIntoCommit]] the band is instead folded from the
+    *      staged batch's per-file key bounds, with no job — and only
+    *      head files whose committed `keyCol` stats can overlap that
+    *      band (plus every stats-less file) become candidates — on a
+    *      key-clustered table this alone discards most of the table
+    *      without reading a row;
     *   2. executor-side touch probe: the candidates are scanned for
     *      `keyCol` ONLY (column pruning keeps the probe narrow),
     *      key-equality semi-joined against the batch keys, and the
@@ -2701,8 +2687,41 @@ object Snapshots {
     * nothing.
     */
   def mergeTouchPlan(spark: SparkSession, table: String, keyCol: String,
-                     keys: DataFrame, version: Option[Int] = None): RewritePlan = {
-    import org.apache.spark.sql.functions.{col, input_file_name, max, min}
+                     keys: DataFrame, version: Option[Int] = None): RewritePlan =
+    touchPlan(spark, table, keyCol, keys, version, keyBand(keyCol, _))
+
+  /** Move 1's band of a key batch already cast to the table column's
+    * type: one 2-scalar driver action. None for an empty or all-NULL
+    * batch and for a type with no stats kind.
+    */
+  private def keyBand(keyCol: String, keysT: DataFrame): Option[StatRange] = {
+    import org.apache.spark.sql.functions.{col, max, min}
+    val k = keysT.columns.head
+    keysT.schema.head.dataType match {
+      case ByteType | ShortType | IntegerType | LongType =>
+        val r = keysT.agg(min(col(k)).cast("long"), max(col(k)).cast("long")).head()
+        if (r.isNullAt(0)) None
+        else Some(LongRange(keyCol, r.getLong(0), r.getLong(1)))
+      case StringType =>
+        val r = keysT.agg(min(col(k)), max(col(k))).head()
+        if (r.isNullAt(0)) None
+        else Some(StringRange(keyCol, r.getString(0), r.getString(1)))
+      case DateType =>
+        val r = keysT.agg(min(col(k)), max(col(k))).head()
+        if (r.isNullAt(0)) None
+        else Some(DateRange(keyCol, r.getDate(0).toLocalDate,
+          r.getDate(1).toLocalDate))
+      case _ => None // no stats kind for this type: every file is a candidate
+    }
+  }
+
+  /** [[mergeTouchPlan]] with move 1's band supplied by `band`, which
+    * receives the type-aligned key batch.
+    */
+  private def touchPlan(spark: SparkSession, table: String, keyCol: String,
+                        keys: DataFrame, version: Option[Int],
+                        band: DataFrame => Option[StatRange]): RewritePlan = {
+    import org.apache.spark.sql.functions.{col, input_file_name}
     require(keys.columns.length == 1,
       s"keys must be a single-column batch key list, got ${keys.columns.mkString(",")}")
     val c = mainChain(table)
@@ -2721,24 +2740,9 @@ object Snapshots {
       case _ => keys
     }
     val k = k0
-    // move 1: the batch's global key band — one 2-scalar driver action
-    val band: Option[StatRange] = keysT.schema.head.dataType match {
-      case ByteType | ShortType | IntegerType | LongType =>
-        val r = keysT.agg(min(col(k)).cast("long"), max(col(k)).cast("long")).head()
-        if (r.isNullAt(0)) None
-        else Some(LongRange(keyCol, r.getLong(0), r.getLong(1)))
-      case StringType =>
-        val r = keysT.agg(min(col(k)), max(col(k))).head()
-        if (r.isNullAt(0)) None
-        else Some(StringRange(keyCol, r.getString(0), r.getString(1)))
-      case DateType =>
-        val r = keysT.agg(min(col(k)), max(col(k))).head()
-        if (r.isNullAt(0)) None
-        else Some(DateRange(keyCol, r.getDate(0).toLocalDate,
-          r.getDate(1).toLocalDate))
-      case _ => None // no stats kind for this type: every file is a candidate
-    }
-    if (band.isEmpty && es.forall(_.stats.contains(keyCol)))
+    // move 1: the batch's global key band
+    val range = band(keysT)
+    if (range.isEmpty && es.forall(_.stats.contains(keyCol)))
       // an all-NULL (or empty) batch matches nothing; es with stats prove it
       return RewritePlan(Seq.empty, es)
     // committed bucket occupancy prunes candidates by EQUALITY, which a
@@ -2754,7 +2758,7 @@ object Snapshots {
       case Some(b) => batchBuckets.get(b.mod).forall(s => b.ids.exists(s))
       case None => true
     }
-    val (cand, carry0) = band match {
+    val (cand, carry0) = range match {
       case Some(b) =>
         es.partition(e => overlaps(e.stats.get(keyCol), b) && bucketCand(e))
       case None => es.partition(bucketCand)
@@ -2787,7 +2791,9 @@ object Snapshots {
     *      cannot silently double-insert);
     *   2. [[mergeTouchPlan]] finds the k-of-N head files actually
     *      holding matched keys (stats pre-prune + executor touch probe —
-    *      no key ever reaches the driver);
+    *      no key ever reaches the driver); its key band comes from the
+    *      (min, max) key bounds the batch's durable staging write
+    *      recorded per file, so the band costs no Spark job;
     *   3. only those files rewrite (matched rows replaced or deleted via
     *      ONE anti-join, source upserts and inserts appended to the same
     *      staged segment); every untouched file carries into the new
@@ -2870,13 +2876,19 @@ object Snapshots {
     // the batch is written to a temp parquet under the table and both
     // passes re-read the frozen bytes. Costs one extra O(delta)
     // write+read; a crash before the cleanup leaves `_tmp/merge-*`
-    // debris (safe to delete any time — nothing references it).
-    val stagedBatch = new Path(table, s"$TmpDir/merge-${java.util.UUID.randomUUID()}")
-    collapsed0.write.parquet(stagedBatch.toString)
+    // debris (safe to delete any time — nothing references it). The
+    // staging write also records each file's key (min, max), so the
+    // touch plan's key band is folded from them on the driver.
+    val stagedRel = s"$TmpDir/merge-${java.util.UUID.randomUUID()}"
+    val stagedBatch = new Path(table, stagedRel)
+    val keyKind = statKindOf(headSchema(keyCol).dataType)
+    val staged = writeStaged(table, stagedRel, collapsed0,
+      keyKind.map(_ => keyCol).toSeq, Nil)
     val collapsed = spark.read.schema(collapsed0.schema).parquet(stagedBatch.toString)
     try {
       val keys = collapsed.select(qcol(keyCol))
-      val plan = mergeTouchPlan(spark, table, keyCol, keys, Some(head))
+      val plan = touchPlan(spark, table, keyCol, keys, Some(head),
+        _ => keyKind.flatMap(foldBand(keyCol, _, staged)))
       val upserts = collapsed.filter(col("__graft_op") =!= "d")
         .select(targetCols.map(col): _*)
       val newContent =
@@ -2898,6 +2910,28 @@ object Snapshots {
   }
 
   private val TmpDir = "_tmp"
+
+  /** The global key band of a staged batch, folded on the driver from
+    * its files' exact (untruncated) bounds of `keyCol` — the only stats
+    * column of the staging write. None when no file holds a non-NULL key.
+    */
+  private def foldBand(keyCol: String, kind: String,
+                       files: Seq[FileStats]): Option[StatRange] = {
+    val bounded = files.filter(_.lo.head != null)
+    if (bounded.isEmpty) None
+    else kind match {
+      case "string" =>
+        val utf8 = Ordering.fromLessThan[String](utf8Cmp(_, _) < 0)
+        Some(StringRange(keyCol, bounded.map(_.lo.head.asInstanceOf[String]).min(utf8),
+          bounded.map(_.hi.head.asInstanceOf[String]).max(utf8)))
+      case _ =>
+        val lo = bounded.map(_.lo.head.asInstanceOf[Long]).min
+        val hi = bounded.map(_.hi.head.asInstanceOf[Long]).max
+        Some(if (kind == "date")
+          DateRange(keyCol, java.time.LocalDate.ofEpochDay(lo), java.time.LocalDate.ofEpochDay(hi))
+        else LongRange(keyCol, lo, hi))
+    }
+  }
 
   /** Row-level diff of two keyed DataFrames: one row per changed key
     * with `change` ∈ insert / delete / update — unchanged keys are not

@@ -8,7 +8,7 @@ import org.apache.spark.sql.classic.ExpressionUtils
   * adapters for the engine's custom Catalyst expressions. Living in a
   * subpackage of `org.apache.spark.sql` is the standard technique for
   * Spark extension libraries (the alternatives — reflection or forking —
-  * are worse); only these three forwarders live here.
+  * are worse); only thin adapters over Spark internals live here.
   */
 object Bridge {
   def column(e: Expression): Column = ExpressionUtils.column(e)
@@ -100,6 +100,62 @@ object Bridge {
       Map.empty[String, String])(cs)
     org.apache.spark.sql.classic.Dataset.ofRows(cs,
       LogicalRelation(relation, isStreaming = false))
+  }
+
+  /** Write `df` as parquet under the fresh directory `path` and return
+    * one [[FileStats]] per written file, gathered INSIDE the write tasks
+    * (the `DeltaJobStatisticsTracker` move): no job re-reads the files
+    * the write has just produced. The write is the one
+    * `InsertIntoHadoopFsRelationCommand` runs for `df.write.parquet` —
+    * `FileFormatWriter.write` with `ParquetFileFormat`, the session's
+    * commit protocol, the same schema checks and a new SQL execution id
+    * — plus a [[StatsJobTracker]].
+    *
+    * Per file: the row count; per `statsCols` name (exact top-level
+    * field; integral, date or string) the (min, max) and non-null
+    * count; per `bucketIds` column (an int-valued expression over `df`,
+    * evaluated by a bound projection) the distinct non-null values, or
+    * None past `bucketIdsMax` of them. Only committed task attempts
+    * report: a failed attempt's tracker dies with it.
+    */
+  def writeParquet(df: org.apache.spark.sql.DataFrame, path: String,
+                   statsCols: Seq[String], bucketIds: Seq[Column],
+                   bucketIdsMax: Int): Seq[FileStats] = {
+    import org.apache.spark.internal.io.FileCommitProtocol
+    import org.apache.spark.sql.catalyst.expressions.{Alias, BindReferences}
+    import org.apache.spark.sql.catalyst.plans.logical.Project
+    import org.apache.spark.sql.execution.SQLExecution
+    import org.apache.spark.sql.execution.datasources.{DataSource, FileFormatWriter}
+    import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
+    val ds = df.asInstanceOf[org.apache.spark.sql.classic.Dataset[_]]
+    val cs = ds.sparkSession
+    val conf = cs.sessionState.conf
+    DataSource.validateSchema("parquet", df.schema, conf)
+    org.apache.spark.sql.util.SchemaUtils.checkColumnNameDuplication(
+      df.schema.fieldNames.toSeq, conf.caseSensitiveAnalysis)
+    val cols = statsCols.map { c =>
+      val i = df.schema.fieldIndex(c)
+      (i, df.schema(i).dataType)
+    }
+    val output = ds.queryExecution.analyzed.output
+    val buckets = if (bucketIds.isEmpty) Nil else
+      df.select(bucketIds: _*).queryExecution.analyzed.asInstanceOf[Project]
+        .projectList.map {
+          case a: Alias => BindReferences.bindReference(a.child, output)
+          case e => BindReferences.bindReference(e, output)
+        }
+    val tracker = new StatsJobTracker(cols, buckets, bucketIdsMax)
+    val qe = ds.queryExecution
+    val committer = FileCommitProtocol.instantiate(conf.fileCommitProtocolClass,
+      jobId = java.util.UUID.randomUUID().toString, outputPath = path)
+    // named like Spark's own write commands, so QueryExecutionListeners
+    // see this write as they see `df.write.parquet`
+    SQLExecution.withNewExecutionId(qe, Some("command")) {
+      FileFormatWriter.write(cs, qe.executedPlan, new ParquetFileFormat(), committer,
+        FileFormatWriter.OutputSpec(path, Map.empty, qe.executedPlan.output),
+        cs.sessionState.newHadoopConf(), Nil, None, Seq(tracker), Map.empty)
+    }
+    tracker.collected
   }
 
   /** The single `BaseRelation` leaf of a planned scan — what a V1
@@ -198,4 +254,135 @@ object Bridge {
     exts.registerFunctions(
       spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
         .sessionState.functionRegistry)
+}
+
+/** One written file's commit stats (see [[Bridge.writeParquet]]): `file`
+  * is the file's name, `lo`/`hi` hold per stats column a `Long`
+  * (integral values; dates as epoch days) or a `String`, null when the
+  * column has no non-null value in the file.
+  */
+final case class FileStats(file: String, rows: Long, lo: Seq[Any], hi: Seq[Any],
+                           nonNull: Seq[Long], bucketIds: Seq[Option[Seq[Int]]])
+
+private final case class TaskFileStats(files: Seq[FileStats])
+  extends org.apache.spark.sql.execution.datasources.WriteTaskStats
+
+/** Driver half: ships the column plan to every write task and collects
+  * the committed tasks' per-file stats in `processStats`, which
+  * `FileFormatWriter` calls on the driver's own instance.
+  */
+private final class StatsJobTracker(
+    cols: Seq[(Int, org.apache.spark.sql.types.DataType)],
+    buckets: Seq[org.apache.spark.sql.catalyst.expressions.Expression],
+    bucketIdsMax: Int)
+  extends org.apache.spark.sql.execution.datasources.WriteJobStatsTracker {
+  @transient var collected: Seq[FileStats] = Nil
+  override def newTaskInstance(): StatsTaskTracker =
+    new StatsTaskTracker(cols, buckets, bucketIdsMax)
+  override def processStats(
+      stats: Seq[org.apache.spark.sql.execution.datasources.WriteTaskStats],
+      jobCommitTime: Long): Unit =
+    collected = stats.flatMap { case TaskFileStats(fs) => fs }
+}
+
+/** Task half: one accumulator per file the task opens. Rows arrive as
+  * reused buffers, so a string bound is copied when it is taken.
+  */
+private final class StatsTaskTracker(
+    cols: Seq[(Int, org.apache.spark.sql.types.DataType)],
+    buckets: Seq[org.apache.spark.sql.catalyst.expressions.Expression],
+    bucketIdsMax: Int)
+  extends org.apache.spark.sql.execution.datasources.WriteTaskStatsTracker {
+  import org.apache.spark.sql.catalyst.InternalRow
+  import org.apache.spark.sql.types._
+  import org.apache.spark.unsafe.types.UTF8String
+
+  private val ords = cols.map(_._1).toArray
+  // 0 byte, 1 short, 2 int/date, 3 long, 4 string
+  private val kinds = cols.map(_._2 match {
+    case ByteType => 0
+    case ShortType => 1
+    case IntegerType | DateType => 2
+    case LongType => 3
+    case _: StringType => 4
+    case other => throw new IllegalArgumentException(s"no stats kind for $other")
+  }).toArray
+  private val project =
+    if (buckets.isEmpty) null
+    else org.apache.spark.sql.catalyst.expressions.UnsafeProjection.create(buckets)
+
+  private final class FileAcc(val path: String) {
+    var rows = 0L
+    val nonNull = new Array[Long](ords.length)
+    val lo = new Array[Long](ords.length)
+    val hi = new Array[Long](ords.length)
+    val slo = new Array[UTF8String](ords.length)
+    val shi = new Array[UTF8String](ords.length)
+    // a set past bucketIdsMax stops growing: its cell is dropped anyway
+    val ids = Array.fill(buckets.size)(scala.collection.mutable.HashSet.empty[Int])
+
+    def add(row: InternalRow): Unit = {
+      rows += 1
+      var i = 0
+      while (i < ords.length) {
+        val o = ords(i)
+        if (!row.isNullAt(o)) {
+          val first = nonNull(i) == 0
+          if (kinds(i) == 4) {
+            val s = row.getUTF8String(o)
+            if (first || s.binaryCompare(slo(i)) < 0) slo(i) = s.clone()
+            if (first || s.binaryCompare(shi(i)) > 0) shi(i) = s.clone()
+          } else {
+            val v = kinds(i) match {
+              case 0 => row.getByte(o).toLong
+              case 1 => row.getShort(o).toLong
+              case 2 => row.getInt(o).toLong
+              case _ => row.getLong(o)
+            }
+            if (first || v < lo(i)) lo(i) = v
+            if (first || v > hi(i)) hi(i) = v
+          }
+          nonNull(i) += 1
+        }
+        i += 1
+      }
+      if (project != null) {
+        val b = project(row)
+        var j = 0
+        while (j < ids.length) {
+          if (!b.isNullAt(j) && ids(j).size <= bucketIdsMax) ids(j) += b.getInt(j)
+          j += 1
+        }
+      }
+    }
+
+    def result: FileStats = {
+      def bound(i: Int, l: Array[Long], s: Array[UTF8String]): Any =
+        if (nonNull(i) == 0) null
+        else if (kinds(i) == 4) s(i).toString
+        else l(i)
+      FileStats(new org.apache.hadoop.fs.Path(path).getName, rows,
+        ords.indices.map(bound(_, lo, slo)), ords.indices.map(bound(_, hi, shi)),
+        nonNull.toSeq,
+        ids.toSeq.map(s => if (s.isEmpty || s.size > bucketIdsMax) None
+                           else Some(s.toSeq.sorted)))
+    }
+  }
+
+  private val files = scala.collection.mutable.LinkedHashMap.empty[String, FileAcc]
+  private var current: FileAcc = _
+
+  override def newPartition(partitionValues: InternalRow): Unit = ()
+  override def newFile(filePath: String): Unit = {
+    current = new FileAcc(filePath)
+    files(filePath) = current
+  }
+  override def closeFile(filePath: String): Unit = ()
+  override def newRow(filePath: String, row: InternalRow): Unit = {
+    if (current == null || current.path != filePath) current = files(filePath)
+    current.add(row)
+  }
+  override def getFinalStats(taskCommitTime: Long)
+      : org.apache.spark.sql.execution.datasources.WriteTaskStats =
+    TaskFileStats(files.values.map(_.result).toSeq)
 }
