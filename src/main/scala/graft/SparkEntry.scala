@@ -2158,8 +2158,9 @@ object SparkEntry {
       val d = docs(s, dir).select(col("doc_id"))
       val seeds = d.filter(col("doc_id") % 50 === 0)
         .select(col("doc_id"), lit(1L).as("weight"))
-      // 3 rounds (vs the uniform query's 5): the weighted path is the
-      // same per-round plan, so extra rounds only re-pay scheduling
+      // 3 rounds (vs the uniform query's 5): the weighted path runs the
+      // same per-round algebra, and a graph this size runs it in
+      // LinkGraph's driver-side loop, where a round is no Spark job
       LinkGraph.pagerank(pagerankEdges(d), d, "src", "dst", "doc_id",
           iters = 3, reset = Some(seeds))
         .select(col("id").as("doc_id"), col("rank"))

@@ -1,6 +1,8 @@
 package graft.operators
 
+import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.Dataset
+import org.apache.spark.sql.execution.LogicalRDD
 
 /** Ownership handle for the MEMORY_AND_DISK caches a multi-branch operator
   * pins internally (Catalyst does not CSE subplans, so a subplan read by
@@ -21,7 +23,7 @@ import org.apache.spark.sql.Dataset
   */
 final class CacheTracker {
   private val owned = scala.collection.mutable.ArrayBuffer.empty[Dataset[_]]
-  private val checkpointed = scala.collection.mutable.ArrayBuffer.empty[Dataset[_]]
+  private val checkpointed = scala.collection.mutable.ArrayBuffer.empty[RDD[_]]
 
   private[operators] def own[T <: Dataset[_]](d: T): T = synchronized {
     owned += d; d
@@ -39,12 +41,16 @@ final class CacheTracker {
     *    long-lived service should prefer reliable checkpoints).
     *  - LIFECYCLE: `Dataset.unpersist` does NOT free checkpoint blocks
     *    (the CacheManager never owned them) — untracked, they are freed
-    *    only when the backing RDD is GC'd. This hook records the dataset
-    *    and [[release]] unpersists the backing RDD explicitly, so
-    *    long-lived sessions can return the block-manager space.
+    *    only when the backing RDD is GC'd. This hook records the backing
+    *    RDD and [[release]] unpersists it explicitly, so long-lived
+    *    sessions can return the block-manager space.
+    *
+    * `d` must be the checkpoint itself (its plan's root a LogicalRDD):
+    * only that RDD is recorded and later freed, so a tracked operator
+    * never frees another operator's checkpoint its plan reads.
     */
   private[operators] def ownCheckpointed[T <: Dataset[_]](d: T): T = synchronized {
-    checkpointed += d; d
+    checkpointed += CacheTracker.checkpointRdd(d); d
   }
 
   /** Unpersist every cache pinned since construction (idempotent). After
@@ -56,13 +62,7 @@ final class CacheTracker {
   def release(): Unit = synchronized {
     owned.foreach(_.unpersist(blocking = false))
     owned.clear()
-    checkpointed.foreach { d =>
-      d.queryExecution.analyzed.foreach {
-        case lr: org.apache.spark.sql.execution.LogicalRDD =>
-          lr.rdd.unpersist(blocking = false)
-        case _ =>
-      }
-    }
+    checkpointed.foreach(_.unpersist(blocking = false))
     checkpointed.clear()
   }
 }
@@ -70,4 +70,22 @@ final class CacheTracker {
 object CacheTracker {
   /** A tracker nobody releases — the default for one-shot callers. */
   def unmanaged: CacheTracker = new CacheTracker
+
+  /** The RDD whose blocks a `localCheckpoint` result reads: the root
+    * LogicalRDD of its plan. Anything else is refused — a plan composed
+    * over a checkpoint does not own it.
+    */
+  private[operators] def checkpointRdd(d: Dataset[_]): RDD[_] =
+    d.queryExecution.analyzed match {
+      case lr: LogicalRDD => lr.rdd
+      case p => throw new IllegalArgumentException(
+        s"not a localCheckpoint result: plan root is ${p.nodeName}")
+    }
+
+  /** Free a `localCheckpoint` result's blocks, which `Dataset.unpersist`
+    * cannot (see [[CacheTracker.ownCheckpointed]]). Only for checkpoints
+    * no live plan reads any more.
+    */
+  private[operators] def freeCheckpoint(d: Dataset[_]): Unit =
+    checkpointRdd(d).unpersist(blocking = false)
 }

@@ -143,7 +143,7 @@ object Components {
       val ck = next.localCheckpoint(eager = true)
       h1.unpersist(blocking = false)
       h2.unpersist(blocking = false)
-      if (labelsCk != null) labelsCk.unpersist(blocking = false)
+      if (labelsCk != null) CacheTracker.freeCheckpoint(labelsCk)
       else labels.unpersist(blocking = false) // iteration 1: the persisted seed
       labelsCk = ck
       labels = spark.createDataFrame(ck.rdd, ck.schema)
@@ -152,7 +152,7 @@ object Components {
       prevSum = s
       iter += 1
     }
-    sym.unpersist(blocking = false)
+    CacheTracker.freeCheckpoint(sym)
     symRaw.unpersist(blocking = false)
     labels.select(col("id"), col("comp").as("component"))
   }

@@ -1,7 +1,11 @@
 package graft.operators
 
-import org.apache.spark.sql.DataFrame
+import scala.collection.mutable
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{LongType, StructField, StructType}
 import org.apache.spark.storage.StorageLevel
 
 /** Link-graph centrality for crawl-scale corpus curation: rank pages by
@@ -40,6 +44,19 @@ import org.apache.spark.storage.StorageLevel
   * driver-side collect in the loop. Ranks are localCheckpoint'd each
   * iteration so plan depth and carried stats stay O(1) in the iteration
   * count (same rationale as [[Components.connectedComponents]]).
+  *
+  * Small inputs: while node rows + edge rows ≤ `localThreshold`
+  * (default 1M, the driver budget of [[Components.connectedComponents]]'
+  * union-find path), [[pagerank]] and [[hits]] collect nodes, edges and
+  * reset weights once (one bounded collect each, no count) and run every
+  * round on the driver, returning a local DataFrame. At that size each
+  * distributed round is pure scheduling (a join, an aggregate, a
+  * broadcast and an eager checkpoint over ~1k edges), so the local loop
+  * pays one collect instead of several jobs per round. It replays the
+  * distributed algebra exactly — the same rows the joins keep, the same
+  * `div` truncation, `*Exact` arithmetic where ANSI SQL raises on
+  * overflow — so both paths return the same rows and schema;
+  * `localThreshold = 0` forces the distributed loop.
   */
 object LinkGraph {
 
@@ -61,33 +78,24 @@ object LinkGraph {
     * nodes absent from `reset` weigh 0 and receive only link inflow.
     * With no `reset` the math reduces exactly to uniform PageRank
     * (w = 1, W = n).
+    *
+    * `localThreshold`: up to this many node rows + edge rows, the rounds
+    * run on the driver (see the object doc); 0 forces the distributed
+    * loop.
     */
   def pagerank(edges: DataFrame, nodes: DataFrame,
                srcCol: String, dstCol: String, idCol: String,
                iters: Int,
                totalScale: Long = 1000000000000L,
                dampNum: Long = 85, dampDen: Long = 100,
-               reset: Option[DataFrame] = None): DataFrame = {
+               reset: Option[DataFrame] = None,
+               localThreshold: Long = 1000000L): DataFrame = {
     require(iters >= 1 && iters <= 50, s"iters must be in [1, 50], got $iters")
     require(dampNum > 0 && dampNum < dampDen, "need 0 < dampNum < dampDen")
     val spark = nodes.sparkSession
-    val defaultP0 = spark.conf.get("spark.sql.shuffle.partitions", "200").toInt
-    // the node table is cached, and CACHED plans keep their build-time
-    // shuffle width (AQE does not re-coalesce inside InMemoryRelation by
-    // default) — so every per-iteration stage that probes or rebuilds the
-    // rank table inherits THIS width for the whole loop. Size it like the
-    // edge table below: measured rows / target, capped at the session
-    // width. The repartition is a no-op exchange at full width (distinct
-    // already leaves hashpartitioning(id, defaultP)).
-    val nsRaw = nodes.select(col(idCol).cast("long").as("id")).distinct()
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    val n = nsRaw.count() // one bounded driver scalar; all per-iteration
-    // aggregates stay distributed
-    require(n > 0, "empty node set")
-    val pn = math.max(1L, math.min(defaultP0.toLong, n / 1000000L + 1L)).toInt
-    val ns0 = nsRaw.repartition(pn, col("id"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    val defaultP = spark.conf.get("spark.sql.shuffle.partitions", "200").toInt
+    // driver-side long constant so the SQL literals below never ride on
+    // 32-bit intermediate arithmetic (ANSI mode faults int overflow)
+    val tnum = (dampDen - dampNum) * totalScale
     // materialize the caller's edge pipeline ONCE: it feeds both the
     // out-degree aggregate and the contribution join side, and the count
     // sizes the loop's partitioning (same measured-width discipline as
@@ -99,7 +107,36 @@ object LinkGraph {
     val e1 = edges
       .select(col(srcCol).cast("long").as("src"), col(dstCol).cast("long").as("dst"))
       .persist(StorageLevel.MEMORY_AND_DISK)
+    val ids = nodes.select(col(idCol).cast("long").as("id"))
+    collectSmall(ids, e1, localThreshold) match {
+      case Some((nodeIds, es)) =>
+        require(nodeIds.nonEmpty, "empty node set")
+        val ranks = localPagerank(nodeIds, es,
+          reset.map(_.select(col(idCol).cast("long"), col("weight").cast("long"))
+            .collect()),
+          iters, totalScale / nodeIds.length, tnum, dampNum, dampDen)
+        e1.unpersist(blocking = false)
+        return spark.createDataFrame(ranks.toSeq.asJava, StructType(Seq(
+          ids.schema("id"), StructField("rank", LongType))))
+      case None =>
+    }
     val edgeCount = e1.count()
+    val defaultP0 = spark.conf.get("spark.sql.shuffle.partitions", "200").toInt
+    // the node table is cached, and CACHED plans keep their build-time
+    // shuffle width (AQE does not re-coalesce inside InMemoryRelation by
+    // default) — so every per-iteration stage that probes or rebuilds the
+    // rank table inherits THIS width for the whole loop. Size it like the
+    // edge table: measured rows / target, capped at the session width.
+    // The repartition is a no-op exchange at full width (distinct
+    // already leaves hashpartitioning(id, defaultP)).
+    val nsRaw = ids.distinct().persist(StorageLevel.MEMORY_AND_DISK)
+    val n = nsRaw.count() // one bounded driver scalar; all per-iteration
+    // aggregates stay distributed
+    require(n > 0, "empty node set")
+    val pn = math.max(1L, math.min(defaultP0.toLong, n / 1000000L + 1L)).toInt
+    val ns0 = nsRaw.repartition(pn, col("id"))
+      .persist(StorageLevel.MEMORY_AND_DISK)
+    val defaultP = spark.conf.get("spark.sql.shuffle.partitions", "200").toInt
     val p = math.max(1L, math.min(defaultP.toLong, edgeCount / 1000000L + 1L)).toInt
     // loop-invariant big side: (src, dst, outdeg), pre-keyed by src so
     // the per-round contribution join only moves the narrow rank table
@@ -130,13 +167,11 @@ object LinkGraph {
       .persist(StorageLevel.MEMORY_AND_DISK)
     val bigW = ns.agg(coalesce(sum("w"), lit(0L)).as("s")).head.getLong(0)
     require(bigW > 0, "total reset weight must be positive")
-    // driver-side long constants so the SQL literals below never ride on
-    // 32-bit intermediate arithmetic (ANSI mode faults int overflow)
-    val tnum = (dampDen - dampNum) * totalScale
     val tden = dampDen * bigW
     e1.unpersist(blocking = false)
-    var ranks = ns.select(col("id"), col("__dang"), lit(totalScale / n).as("r"))
+    var ranksCk = ns.select(col("id"), col("__dang"), lit(totalScale / n).as("r"))
       .localCheckpoint(eager = true)
+    var ranks = ranksCk
     var iter = 0
     while (iter < iters) {
       val contribs = edgesDeg
@@ -157,13 +192,91 @@ object LinkGraph {
             expr(s"($dampNum * (coalesce(c, 0L) + ((dm * w) div $bigW)))" +
               s" div $dampDen")).as("r"))
       val ck = next.localCheckpoint(eager = true)
+      CacheTracker.freeCheckpoint(ranksCk)
+      ranksCk = ck
       ranks = spark.createDataFrame(ck.rdd, ck.schema)
       iter += 1
     }
+    CacheTracker.freeCheckpoint(edgesDeg)
     ns.unpersist(blocking = false)
     ns0.unpersist(blocking = false)
     nsRaw.unpersist(blocking = false)
     ranks.select(col("id"), col("r").as("rank"))
+  }
+
+  /** The distinct node ids (a null id among them) and the edges, when
+    * raw node rows + edge rows ≤ `localThreshold`. Each table is one
+    * collect of at most `max + 1` rows, so the size check and the fetch
+    * are the same job, and the distinct runs on the driver: no count, no
+    * exchange. The nodes are read only once the edges fit. Above the
+    * bound the price is one discarded collect of `localThreshold + 1`
+    * rows, within the same driver budget.
+    */
+  private def collectSmall(ids: DataFrame, edges: DataFrame,
+                           localThreshold: Long): Option[(Array[Row], Array[Row])] = {
+    def atMost(df: DataFrame, max: Long): Option[Array[Row]] =
+      if (max < 0) None
+      else Some(df.limit(math.min(max, Int.MaxValue - 1L).toInt + 1).collect())
+        .filter(_.length <= max)
+    for (es <- atMost(edges, localThreshold);
+         ns <- atMost(ids, localThreshold - es.length)) yield (ns.distinct, es)
+  }
+
+  /** [[pagerank]]'s rounds on the driver over the collected node ids,
+    * (src, dst) edges and optional (id, weight) reset rows. Node rows are
+    * the ones `ns` holds: the left join to `reset` repeats a node once
+    * per matching weight row, and weighs a node without one (a null id
+    * included) 0. Every edge of a source counts in its out-degree, but
+    * only edges between a node row and a non-null `dst` carry rank, as
+    * the inner joins keep them; sums for a `dst` outside the nodes are
+    * still formed, so they overflow where the aggregate would.
+    */
+  private def localPagerank(ids: Array[Row], es: Array[Row],
+                            resetRows: Option[Array[Row]], iters: Int,
+                            r0: Long, tnum: Long,
+                            dampNum: Long, dampDen: Long): Array[Row] = {
+    import Math.{addExact, multiplyExact}
+    def opt(r: Row, i: Int): Option[Long] =
+      if (r.isNullAt(i)) None else Some(r.getLong(i))
+    val outdeg = mutable.HashMap.empty[Long, Long]
+    es.foreach(e => opt(e, 0).foreach(s => outdeg(s) = outdeg.getOrElse(s, 0L) + 1L))
+    val weights = resetRows.map(_.flatMap(r => opt(r, 0).map(_ -> opt(r, 1).getOrElse(0L)))
+      .groupMap(_._1)(_._2))
+    val rows: Array[(Option[Long], Long)] = ids.flatMap { r =>
+      val id = opt(r, 0)
+      val ws = weights.fold(Array(1L))(m => id.flatMap(m.get).getOrElse(Array(0L)))
+      ws.map(id -> _)
+    }
+    val w = rows.map(_._2)
+    val bigW = w.foldLeft(0L)(addExact)
+    require(bigW > 0, "total reset weight must be positive")
+    val tden = dampDen * bigW
+    val dang = rows.map(_._1.forall(!outdeg.contains(_)))
+    // one contribution link per (edge, source row), summed into a slot
+    // per distinct non-null dst
+    val rowsOf = rows.indices.groupBy(rows(_)._1)
+    val slot = mutable.HashMap.empty[Long, Int]
+    val links = es.flatMap { e =>
+      (opt(e, 0), opt(e, 1)) match {
+        case (Some(s), Some(d)) =>
+          val to = slot.getOrElseUpdate(d, slot.size)
+          rowsOf.getOrElse(Some(s), Nil).map(i => (i, to, outdeg(s)))
+        case _ => Nil
+      }
+    }
+    val rowSlot = rows.map(_._1.flatMap(slot.get).getOrElse(-1))
+    var r = Array.fill(rows.length)(r0)
+    for (_ <- 1 to iters) {
+      val c = new Array[Long](slot.size)
+      links.foreach { case (i, to, deg) => c(to) = addExact(c(to), r(i) / deg) }
+      val dm = rows.indices.foldLeft(0L)((m, i) => if (dang(i)) addExact(m, r(i)) else m)
+      r = Array.tabulate(rows.length) { i =>
+        val ci = if (rowSlot(i) < 0) 0L else c(rowSlot(i))
+        addExact(multiplyExact(tnum, w(i)) / tden,
+          multiplyExact(dampNum, addExact(ci, multiplyExact(dm, w(i)) / bigW)) / dampDen)
+      }
+    }
+    rows.indices.map(i => Row(rows(i)._1.map(Long.box).orNull, r(i))).toArray
   }
 
   /** HITS (Kleinberg): mutually-reinforcing hub and authority scores —
@@ -188,10 +301,13 @@ object LinkGraph {
     * (id, score) tables and the grouped partial sums move; the two
     * normalization totals are 1-row aggregates re-entering as
     * broadcasts. Both score tables are localCheckpoint'd per round.
+    * Up to `localThreshold` node rows + edge rows, the rounds run on the
+    * driver instead, as in [[pagerank]].
     */
   def hits(edges: DataFrame, nodes: DataFrame,
            srcCol: String, dstCol: String, idCol: String,
-           iters: Int, scale: Long = 1000000L): DataFrame = {
+           iters: Int, scale: Long = 1000000L,
+           localThreshold: Long = 1000000L): DataFrame = {
     require(iters >= 1 && iters <= 50, s"iters must be in [1, 50], got $iters")
     val spark = nodes.sparkSession
     val defaultP = spark.conf.get("spark.sql.shuffle.partitions", "200").toInt
@@ -200,6 +316,16 @@ object LinkGraph {
     val e0 = edges.select(col(srcCol).cast("long").as("src"),
       col(dstCol).cast("long").as("dst"))
       .persist(StorageLevel.MEMORY_AND_DISK)
+    val ids = nodes.select(col(idCol).cast("long").as("id"))
+    collectSmall(ids, e0, localThreshold) match {
+      case Some((nodeIds, es)) =>
+        val scores = localHits(nodeIds, es, iters, scale)
+        e0.unpersist(blocking = false)
+        return spark.createDataFrame(scores.toSeq.asJava, StructType(Seq(
+          ids.schema("id"), StructField("hub", LongType, nullable = false),
+          StructField("authority", LongType, nullable = false))))
+      case None =>
+    }
     val edgeCount = e0.count()
     val p = math.max(1L, math.min(defaultP.toLong, edgeCount / 1000000L + 1L)).toInt
     val eBySrc = e0.repartition(p, col("src")).localCheckpoint(eager = true)
@@ -208,11 +334,15 @@ object LinkGraph {
     // node table sized to the measured width too (same rationale as
     // [[pagerank]]: cached plans keep their build-time shuffle width, and
     // every per-round stage inherits it)
-    val ns = nodes.select(col(idCol).cast("long").as("id")).distinct()
+    val ns = ids.distinct()
       .repartition(p, col("id"))
       .persist(StorageLevel.MEMORY_AND_DISK)
+    // checkpoints the latest scores still read; each round frees the
+    // previous round's once its own are materialized
+    val live = mutable.ArrayBuffer.empty[DataFrame]
     def ck(df: DataFrame): DataFrame = {
       val c = df.localCheckpoint(eager = true)
+      live += c
       spark.createDataFrame(c.rdd, c.schema)
     }
     // x_raw -> joined back to all nodes (absent = 0), divided by the
@@ -242,6 +372,7 @@ object LinkGraph {
     var auths: DataFrame = null
     var iter = 0
     while (iter < iters) {
+      val stale = live.toList
       auths = normalize(
         eBySrc.join(hubs.withColumnRenamed("id", "src"), "src")
           .groupBy(col("dst").as("id")).agg(sum("hub").as("x")),
@@ -250,6 +381,8 @@ object LinkGraph {
         eByDst.join(auths.withColumnRenamed("id", "dst"), "dst")
           .groupBy(col("src").as("id")).agg(sum("authority").as("x")),
         "hub")
+      stale.foreach(CacheTracker.freeCheckpoint)
+      live --= stale
       iter += 1
     }
     // absent = zero, attached once: a node no hub/authority mass ever
@@ -261,7 +394,53 @@ object LinkGraph {
       .join(auths, Seq("id"), "left")
       .select(col("id"), coalesce(col("hub"), lit(0L)).as("hub"),
         coalesce(col("authority"), lit(0L)).as("authority")))
+    (live.init ++ Seq(eBySrc, eByDst)).foreach(CacheTracker.freeCheckpoint)
     ns.unpersist(blocking = false)
     out
+  }
+
+  /** [[hits]]' rounds on the driver over the collected node ids and
+    * (src, dst) edges. Scores live in one slot per non-null id on a node
+    * or an edge end: a sum reaching an id outside the nodes is carried
+    * and propagates, as the distributed tables carry it, and a null
+    * end's sum enters the round's normalization total only; the output
+    * keeps the node ids, absent scores 0.
+    */
+  private def localHits(ids: Array[Row], es: Array[Row], iters: Int,
+                        scale: Long): Array[Row] = {
+    import Math.addExact
+    val slot = mutable.HashMap.empty[Long, Int]
+    def slotOf(r: Row, i: Int): Int =
+      if (r.isNullAt(i)) -1 else slot.getOrElseUpdate(r.getLong(i), slot.size)
+    val nodeSlot = ids.map(slotOf(_, 0))
+    val src = es.map(slotOf(_, 0))
+    val dst = es.map(slotOf(_, 1))
+    // one half-round: every edge with a known `from` end adds that end's
+    // score to its `to` end, then all sums divide by the guarded total
+    def half(from: Array[Long], fromEnd: Array[Int], toEnd: Array[Int]): Array[Long] = {
+      val raw = new Array[Long](slot.size)
+      var nullEnd = 0L
+      es.indices.foreach { k =>
+        if (fromEnd(k) >= 0) {
+          val v = from(fromEnd(k))
+          if (toEnd(k) >= 0) raw(toEnd(k)) = addExact(raw(toEnd(k)), v)
+          else nullEnd = addExact(nullEnd, v)
+        }
+      }
+      val div = math.max(1L, raw.foldLeft(nullEnd)(addExact) / scale)
+      raw.map(_ / div)
+    }
+    var hub = new Array[Long](slot.size)
+    nodeSlot.foreach(i => if (i >= 0) hub(i) = scale)
+    var auth = hub
+    for (_ <- 1 to iters) {
+      auth = half(hub, src, dst)
+      hub = half(auth, dst, src)
+    }
+    ids.indices.map { j =>
+      val i = nodeSlot(j)
+      Row(if (i < 0) null else ids(j).getLong(0),
+        if (i < 0) 0L else hub(i), if (i < 0) 0L else auth(i))
+    }.toArray
   }
 }

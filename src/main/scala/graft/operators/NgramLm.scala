@@ -176,14 +176,14 @@ object NgramLm {
     val spark = docs.sparkSession
     import spark.implicits._
     // r20: same integral-id dispatch as the Dedup kernels (int ids take
-    // the kernel too, cast to long and restored below), and null ids are
-    // DROPPED explicitly before the non-nullable encoder — a null id
-    // carries no identity to aggregate under, and the old behavior was a
-    // runtime encoder error on the kernel path vs a null group on the
-    // exploded path (divergent failure modes, ADVICE r19)
+    // the kernel too, cast to long and restored below). Null ids are
+    // DROPPED on both paths, before the kernel's non-nullable encoder —
+    // a null id carries no identity to aggregate under, and the old
+    // behavior was a runtime encoder error on the kernel path vs a null
+    // group on the exploded path (divergent failure modes, ADVICE r19)
+    val keyed = docs.filter(col(idCol).isNotNull)
     if (Dedup.integralId(docs, idCol)) {
-      val rows = docs
-        .filter(col(idCol).isNotNull)
+      val rows = keyed
         .select(col(idCol).cast("long"), col(textCol).cast("string"))
         .as[(Long, String)]
         .mapPartitions(_.flatMap { case (id, text) =>
@@ -217,7 +217,7 @@ object NgramLm {
       val g = if (order == 3) trigrams(toks(col(textCol)))
         else bigrams(toks(col(textCol)))
       val cols = (1 to order).map(j => col(s"g.w$j").as(s"w$j"))
-      docs.select(col(idCol), explode(g).as("g"))
+      keyed.select(col(idCol), explode(g).as("g"))
         .select(col(idCol) +: cols: _*)
         .withColumn("__occ", lit(1L))
     }
@@ -317,6 +317,7 @@ object NgramLm {
     * adjacent trigram occurrences of
     * coalesce(tri_score(w1w2w3), bi2_score(w2w3), uni2_score(w3), 0).
     * Output: (idCol, n_trigrams, score_sum, score_avg) — all BIGINT.
+    * Docs with a null id are dropped, whatever the id column's type.
     */
   def scoreTrigram(
       docs: DataFrame,
@@ -351,7 +352,8 @@ object NgramLm {
   /** Score every document of `docs` against a trained model: one row
     * per doc with at least one bigram — (idCol, n_bigrams, score_sum,
     * score_avg), all BIGINT, score_avg = score_sum div n_bigrams in
-    * [0, Scale]. Higher = more fluent under the training corpus.
+    * [0, Scale]. Higher = more fluent under the training corpus. Docs
+    * with a null id are dropped, whatever the id column's type.
     */
   def scoreBigram(
       docs: DataFrame,

@@ -151,4 +151,29 @@ class NgramLmSpec extends SparkTestBase {
       .collect().map(r => r.getLong(0) -> ((r.getLong(1), r.getLong(2)))).toMap
     assert(gotMap === wantMap) // null-id doc dropped, int ids scored identically
   }
+
+  test("scoreBigram/scoreTrigram: a null-id doc drops for long and string ids alike") {
+    val (bi, uni) = model
+    val longDocs = spark.createDataFrame(
+      java.util.Arrays.asList(
+        org.apache.spark.sql.Row(1L, "a b c a"),
+        org.apache.spark.sql.Row(2L, "z z b a"),
+        org.apache.spark.sql.Row(null, "a b c a")),
+      org.apache.spark.sql.types.StructType(Seq(
+        org.apache.spark.sql.types.StructField("id",
+          org.apache.spark.sql.types.LongType, nullable = true),
+        org.apache.spark.sql.types.StructField("text",
+          org.apache.spark.sql.types.StringType, nullable = true))))
+    // the long column takes the kernel, the string one the exploded path
+    val stringDocs = longDocs.select(col("id").cast("string").as("id"), col("text"))
+    def scored(df: org.apache.spark.sql.DataFrame) = df.collect()
+      .map(r => Option(r.get(0)).map(_.toString) -> r.toSeq.tail).toSet
+    val byLong = scored(NgramLm.scoreBigram(longDocs, "id", "text", bi, uni))
+    assert(byLong.map(_._1) == Set(Some("1"), Some("2")))
+    assert(scored(NgramLm.scoreBigram(stringDocs, "id", "text", bi, uni)) == byLong)
+    val (tri, bi3, uni3) =
+      NgramLm.trainTrigram(Seq("a b c a b c a b d").toDF("text"), "text")
+    assert(scored(NgramLm.scoreTrigram(stringDocs, "id", "text", tri, bi3, uni3)) ==
+      scored(NgramLm.scoreTrigram(longDocs, "id", "text", tri, bi3, uni3)))
+  }
 }
