@@ -55,9 +55,8 @@ class CheckpointReleaseSpec extends SparkTestBase {
       "connectedComponents" -> (() => Components.connectedComponents(
         edges.filter(col("src") % 5 =!= 0), "src", "dst", localThreshold = 0L)),
       "pagerank" -> (() => LinkGraph.pagerank(edges, nodes, "src", "dst", "id", 3,
-        reset = Some(seeds), localThreshold = 0L)),
-      "hits" -> (() => LinkGraph.hits(edges, nodes, "src", "dst", "id", 3,
-        localThreshold = 0L)))
+        1000000000000L, 85L, 100L, Some(seeds), 0L)),
+      "hits" -> (() => LinkGraph.hits(edges, nodes, "src", "dst", "id", 3, 1000000L, 0L)))
     for ((name, build) <- builds) {
       val (left, read) = leftPinned(build())
       assert(left.nonEmpty, s"$name: the result reads a checkpoint")

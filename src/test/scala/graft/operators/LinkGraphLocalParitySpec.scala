@@ -7,6 +7,7 @@ import scala.util.{Failure, Random, Success, Try}
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
 import org.apache.spark.sql.graftbridge.Bridge
 import org.apache.spark.sql.types.{LongType, StructField, StructType}
 
@@ -43,13 +44,10 @@ class LinkGraphLocalParitySpec extends SparkTestBase {
     Try {
       val out = algo match {
         case PageRank(scale, num, den) =>
-          LinkGraph.pagerank(edges, nodes, "src", "dst", "id", iters,
-            totalScale = scale, dampNum = num, dampDen = den,
-            reset = g.reset.map(frame(longs("id", "weight"), _)),
-            localThreshold = localThreshold)
+          LinkGraph.pagerank(edges, nodes, "src", "dst", "id", iters, scale, num, den,
+            g.reset.map(frame(longs("id", "weight"), _)), localThreshold)
         case Hits(scale) =>
-          LinkGraph.hits(edges, nodes, "src", "dst", "id", iters,
-            scale = scale, localThreshold = localThreshold)
+          LinkGraph.hits(edges, nodes, "src", "dst", "id", iters, scale, localThreshold)
       }
       (out.schema, out.collect().map(_.toString).toSeq.sorted)
     } match {
@@ -60,7 +58,7 @@ class LinkGraphLocalParitySpec extends SparkTestBase {
 
   private def assertParity(g: Graph, algo: Algo, iters: Int,
                            clue: String): Option[(StructType, Seq[String])] = {
-    val local = run(g, algo, iters, localThreshold = 1000000L)
+    val local = run(g, algo, iters, LinkGraph.LocalThreshold)
     val dist = run(g, algo, iters, localThreshold = 0L)
     assert(local == dist, s"$clue: $algo iters=$iters on $g")
     local
@@ -128,8 +126,8 @@ class LinkGraphLocalParitySpec extends SparkTestBase {
     import s.implicits._
     val ns = Seq(1L, 2L, 3L).toDF("id")
     val es = Seq((1L, 2L), (2L, 3L)).toDF("src", "dst")
-    val pair = Seq(1000000L, 0L).map(t => LinkGraph.pagerank(es, ns, "src", "dst",
-      "id", 2, localThreshold = t))
+    val pair = Seq(LinkGraph.LocalThreshold, 0L).map(t => LinkGraph.pagerank(es, ns,
+      "src", "dst", "id", 2, 1000000000000L, 85L, 100L, None, t))
     assert(!pair.head.schema("id").nullable)
     assert(pair.head.schema == pair(1).schema)
     assert(pair.head.collect().toSet == pair(1).collect().toSet)
@@ -140,8 +138,33 @@ class LinkGraphLocalParitySpec extends SparkTestBase {
     // overflows a long in the first round
     val g = Graph(Seq(Seq(0L), Seq(1L), Seq(2L)), Seq(Seq(0L, 1L)), None)
     val algo = PageRank(Long.MaxValue / 4, 85L, 100L)
-    assert(run(g, algo, 2, localThreshold = 1000000L).isEmpty)
+    assert(run(g, algo, 2, LinkGraph.LocalThreshold).isEmpty)
     assert(run(g, algo, 2, localThreshold = 0L).isEmpty)
+  }
+
+  test("the bound counts edge, node and reset rows together") {
+    // at a bound of 100 rows, every graph past it (on edges alone, on
+    // edges + nodes, or only with a large reset table) takes the
+    // distributed loop, and a graph at exactly 100 rows the local one
+    def ids(n: Int) = (0 until n).map(i => Seq[Any](i.toLong))
+    def ring(m: Int, n: Int) = (0 until m).map(i => Seq[Any](i.toLong % n, (i + 1L) % n))
+    def weights(m: Int) = Some((0 until m).map(i => Seq[Any](i.toLong, 1L + i % 3)))
+    val cases = Seq(
+      "101 edges" -> (Graph(ids(5), ring(101, 5), None), false),
+      "50 edges + 60 nodes" -> (Graph(ids(60), ring(50, 60), None), false),
+      "30 + 30 + a 50-row reset" -> (Graph(ids(30), ring(30, 30), weights(50)), false),
+      "30 + 30 + a 40-row reset" -> (Graph(ids(30), ring(30, 30), weights(40)), true))
+    for ((name, (g, local)) <- cases) {
+      val out = LinkGraph.pagerank(frame(longs("src", "dst"), g.edges),
+        frame(longs("id"), g.nodes), "src", "dst", "id", 3, 1000000000000L, 85L, 100L,
+        g.reset.map(frame(longs("id", "weight"), _)), 100L)
+      val ranLocal = out.queryExecution.analyzed.collectFirst {
+        case _: LocalRelation => true
+      }.isDefined
+      assert(ranLocal == local, s"$name: local path taken = $ranLocal")
+      assert(out.collect().map(_.toString).toSeq.sorted ==
+        run(g, PageRank(1000000000000L, 85L, 100L), 3, 0L).get._2, name)
+    }
   }
 
   test("a local pagerank build runs a fixed handful of jobs, whatever iters") {
