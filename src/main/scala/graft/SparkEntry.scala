@@ -5617,7 +5617,7 @@ object SparkEntry {
   /** Brute-force quadratic truth for q_allpairs_cosine: every pair of
     * 4-shingle sets with 10⁶·i² ≥ 700‰²·|A|·|B| — the prefix-filtered
     * operator must reproduce it EXACTLY (same short-doc whole-text rule
-    * as Dedup.explodedShingles).
+    * as Dedup.shinglesJvm).
     */
   private val allPairsSql =
     s"""WITH tok AS (SELECT doc_id, string_split($normSql, ' ') AS t FROM documents),

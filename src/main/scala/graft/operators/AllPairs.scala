@@ -2,6 +2,9 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{StringType, StructField}
+
+import scala.jdk.CollectionConverters._
 
 /** Exact all-pairs cosine similarity self-join over binary shingle sets
   * with prefix filtering — Bayardo, Ma & Srikant, "Scaling Up All Pairs
@@ -53,7 +56,7 @@ import org.apache.spark.sql.functions._
   * output carries ids + integer evidence, re-attachable by id.
   *
   * Shingling: pass `shingleSize` > 1 to compare word-k-gram sets
-  * (reuses [[Dedup.explodedShingles]]' codegen'd window formulation).
+  * (the [[Dedup.shinglesJvm]] shingles, one [[PerDoc]] kernel pass).
   * Unigram sets only make sense for vocabulary-rich elements; k ≥ 3
   * shingles are what near-dup adjudication wants.
   */
@@ -71,32 +74,15 @@ object AllPairs {
       shingleSize: Int = 1,
       tracker: CacheTracker = CacheTracker.unmanaged): DataFrame = {
     // (id, element) duplicates can only arise WITHIN a document, so the
-    // distinct is doc-local: on long ids one narrow per-doc pass emits
-    // each element once (the signature-kernel discipline — see
-    // Dedup.shinglesJvm and the kernel-parity spec), skipping the window
-    // and the distinct aggregate outright; other id types keep the
-    // exploded window formulation.
-    val elems =
-      if (docs.schema(idCol).dataType == org.apache.spark.sql.types.LongType) {
-        val spark = docs.sparkSession
-        import spark.implicits._
-        val p = spark.sparkContext.defaultParallelism
-        val k = shingleSize
-        docs.repartition(p, col(idCol))
-          .select(col(idCol).cast("long"), col(textCol).cast("string"))
-          .as[(Long, String)]
-          .mapPartitions(_.flatMap { case (id, text) =>
-            if (text == null) Iterator.empty
-            else {
-              val set = new java.util.LinkedHashSet[String]()
-              Dedup.shinglesJvm(Dedup.normTextJvm(text), k).foreach(set.add)
-              scala.jdk.CollectionConverters.IteratorHasAsScala(set.iterator())
-                .asScala.map(el => (id, el))
-            }
-          }).toDF("__id", "__el")
-      } else Dedup.explodedShingles(docs, idCol, textCol, shingleSize)
-        .select(col(idCol).as("__id"), col("__sh").as("__el"))
-        .distinct()
+    // distinct is doc-local: one per-doc pass emits each element once,
+    // with no window and no distinct aggregate
+    val k = shingleSize
+    val elems = PerDoc.texts(docs, idCol, textCol, StructField("__el", StringType)) {
+      (_, text) =>
+        val set = new java.util.LinkedHashSet[String]()
+        Dedup.shinglesJvm(Dedup.normTextJvm(text), k).foreach(set.add)
+        set.iterator().asScala.map(Seq(_))
+    }.withColumnRenamed(idCol, "__id")
     cosinePairsOnElements(elems, tPerMille, tracker)
   }
 

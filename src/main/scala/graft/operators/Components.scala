@@ -42,31 +42,30 @@ object Components {
     // anyway): an iterative loop's per-round cost at small scale is task
     // scheduling, not data, so a 4k-edge graph runs on 1 partition while
     // a billion-edge graph still gets full parallelism (~1M edges each).
-    // materialize the caller's edge pipeline ONCE before symmetrizing:
-    // the self-union references `edges` twice, and without this persist
-    // the whole upstream pair-generation plan (LSH banding etc.) executes
-    // once per union branch (no subplan CSE in Catalyst)
-    val e0 = edges
+    val pairs = edges
       .select(col(srcCol).cast("long").as("a"), col(dstCol).cast("long").as("b"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
     // the size check counts RAW pairs (r20): union-find is direction-
     // and duplicate-insensitive (find/union touch both endpoints and
     // re-unions are no-ops), so the small path collects the raw pair
     // list directly — the symmetrize-union, its corpus-wide distinct
-    // exchange, and its persist existed only for the DISTRIBUTED loop
-    // and now build exclusively on that path. The driver-memory bound
-    // is unchanged (≤ localThreshold rows collected); the threshold's
-    // meaning shifts from distinct-sym edges to raw pairs — strictly
-    // more conservative (raw ≥ distinct-sym/2, and pair generators
-    // upstream already dedup pairs).
-    val rawCount = e0.count()
-    if (rawCount <= localThreshold) {
-      val result = localUnionFind(e0.collect().map(r => (r.getLong(0), r.getLong(1))))
-      e0.unpersist(blocking = false)
+    // exchange, and its persist exist only for the DISTRIBUTED loop.
+    // One bounded collect of at most localThreshold + 1 rows is both the
+    // size check and the small path's fetch (one job, as in LinkGraph);
+    // the driver-memory bound is unchanged. The threshold counts raw
+    // pairs, not distinct-sym edges — strictly more conservative (raw ≥
+    // distinct-sym/2, and pair generators upstream already dedup pairs).
+    val head = pairs.limit(math.min(localThreshold, Int.MaxValue - 1L).toInt + 1).collect()
+    if (head.length <= localThreshold) {
+      val result = localUnionFind(head.map(r => (r.getLong(0), r.getLong(1))))
       val spark = edges.sparkSession
       import spark.implicits._
       return result.toSeq.toDF("id", "component")
     }
+    // materialize the caller's edge pipeline ONCE before symmetrizing:
+    // the self-union references it twice, and without this persist the
+    // whole upstream pair-generation plan (LSH banding etc.) executes
+    // once per union branch (no subplan CSE in Catalyst)
+    val e0 = pairs.persist(StorageLevel.MEMORY_AND_DISK)
     val symRaw = e0
       .union(e0.select(col("b").as("a"), col("a").as("b")))
       .distinct()

@@ -25,9 +25,9 @@ object Decontaminate {
     */
   def overlapCounts(corpus: DataFrame, eval: DataFrame, idCol: String,
                     textCol: String, n: Int = 8): DataFrame = {
-    // digest rows via the per-doc kernel face (Dedup.distinctGramDigests
-    // — window+distinct fallback for non-long ids); the eval side still
-    // reduces to a GLOBAL distinct digest set (benchmark-sized)
+    // digest rows via the per-doc kernel face (Dedup.distinctGramDigests);
+    // the eval side still reduces to a GLOBAL distinct digest set
+    // (benchmark-sized)
     val evalGrams = Dedup.distinctGramDigests(
       eval.select(col(idCol), col(textCol)), idCol, textCol, n)
       .select(col("__g")).distinct()

@@ -3,6 +3,9 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{ArrayType, BinaryType, IntegerType, LongType, StringType, StructField}
+
+import scala.jdk.CollectionConverters._
 
 /** Deduplication operators for large-scale training-data pipelines.
   *
@@ -66,44 +69,6 @@ object Dedup {
     */
   def normText(c: Column): Column = lower(trim(regexp_replace(c, "\\s+", " ")))
 
-  /** (id, shingle) exploded rows — the input shape for signature
-    * aggregation. Formulated as posexplode(tokens) + window `lead` rather
-    * than array higher-order functions: `transform`/`slice` do NOT
-    * participate in whole-stage codegen and evaluate interpreted (measured
-    * ~10× slower), while generate → window → project → hash-aggregate is
-    * fully codegen'd, and the window's doc-id partitioning is reused by
-    * the downstream groupBy (one shuffle total).
-    *
-    * Documents shorter than `shingleSize` tokens contribute their whole
-    * text as a single shingle.
-    */
-  def explodedShingles(df: DataFrame, idCol: String, textCol: String,
-                       shingleSize: Int): DataFrame = {
-    // Explicit fixed-width repartition: this stage is CPU-bound (hashing
-    // per shingle), and AQE would otherwise coalesce the tiny-by-bytes
-    // shuffle to one partition, serializing it. A fixed numPartitions is
-    // exempt from AQE coalescing; the same hash partitioning is then
-    // reused by the window AND the downstream signature groupBy (one
-    // exchange total). On a cluster this is cores-sized, exactly as a
-    // CPU-bound stage should be.
-    val p = df.sparkSession.sparkContext.defaultParallelism
-    val toks = split(normText(col(textCol)), " ")
-    val posTok = df.repartition(p, col(idCol))
-      .select(col(idCol), size(toks).as("__n"),
-        posexplode(toks).as(Seq("__pos", "__t")))
-    if (shingleSize == 1) posTok.select(col(idCol), col("__t").as("__sh"))
-    else {
-      val w = Window.partitionBy(col(idCol)).orderBy(col("__pos"))
-      val leads = (1 until shingleSize).map(j => lead(col("__t"), j).over(w))
-      posTok
-        .withColumn("__sh", concat_ws(" ", (col("__t") +: leads): _*))
-        .withColumn("__last", leads.last) // window exprs can't sit in filter()
-        .filter(col("__last").isNotNull ||
-          (col("__n") < shingleSize && col("__pos") === 0))
-        .select(col(idCol), col("__sh"))
-    }
-  }
-
   /** Winnowing fingerprints (Schleimer, Wilkerson, Aiken 2003 — the MOSS
     * algorithm): hash every k-token shingle, slide a window of `w`
     * consecutive shingle hashes, keep each window's MINIMUM, and emit the
@@ -120,54 +85,30 @@ object Dedup {
     * md5 mirrors the whole pipeline bit-for-bit). Documents shorter than
     * one full window (< w + k − 1 tokens) emit no row.
     *
-    * Scale shape: ONE fixed-width exchange by document (as in
-    * [[explodedShingles]]) feeds the shingle window, the sliding-min
-    * window, and the final per-doc aggregate — position windows and the
-    * groupBy all cluster by `idCol`. Nothing shuffles at corpus width but
-    * (doc, hash) rows.
+    * Scale shape: ONE fixed-width exchange by document feeds one
+    * [[PerDoc]] kernel pass — fingerprints, the distinct set, the sort
+    * and the digest are all doc-local, so there is no window and no
+    * aggregate.
     */
   def winnowFingerprints(df: DataFrame, idCol: String, textCol: String,
-                         shingleSize: Int = 4, window: Int = 5): DataFrame =
-    if (integralId(df, idCol)) {
-      // per-doc kernel (same rationale and parity discipline as the
-      // minhash signature kernels below): fingerprints, the distinct
-      // set, the sort and the digest are all doc-local, so the whole
-      // output row folds into one narrow pass — no window, no aggregate
-      require(shingleSize >= 1 && window >= 1, "shingle and window must be >= 1")
-      val spark = df.sparkSession
-      import spark.implicits._
-      val p = spark.sparkContext.defaultParallelism
-      val (k, w) = (shingleSize, window)
-      val rows = df.repartition(p, col(idCol))
-        .select(col(idCol).cast("long"), col(textCol).cast("string"))
-        .as[(Long, String)]
-        .mapPartitions { it =>
-          val md = java.security.MessageDigest.getInstance("MD5")
-          it.flatMap { case (id, text) =>
-            if (text == null) Iterator.empty
-            else {
-              val fps = winnowMinsJvm(md, normTextJvm(text), k, w)
-              if (fps.isEmpty) Iterator.empty
-              else {
-                val distinct = fps.distinct.sorted
-                Iterator.single((id, distinct.length.toLong,
-                  md5HexJvm(md, distinct.mkString(","))))
-              }
-            }
-          }
-        }
-      restoreIdType(rows.toDF(idCol, "n_fp", "fp_md5"), df, idCol)
-    } else winnowFingerprintRows(df, idCol, textCol, shingleSize, window)
-      .groupBy(col(idCol))
-      .agg(size(collect_set(col("fp"))).cast("long").as("n_fp"),
-        md5(concat_ws(",",
-          sort_array(collect_set(col("fp"))).cast("array<string>")))
-          .as("fp_md5"))
+                         shingleSize: Int = 4, window: Int = 5): DataFrame = {
+    require(shingleSize >= 1 && window >= 1, "shingle and window must be >= 1")
+    val (k, w) = (shingleSize, window)
+    PerDoc.texts(df, idCol, textCol, StructField("n_fp", LongType, false),
+        StructField("fp_md5", StringType)) { (md, text) =>
+      val fps = winnowMinsJvm(md, normTextJvm(text), k, w)
+      if (fps.isEmpty) Iterator.empty
+      else {
+        val distinct = fps.distinct.sorted
+        Iterator.single(Seq(distinct.length.toLong, md5HexJvm(md, distinct.mkString(","))))
+      }
+    }
+  }
 
   /** One document's kept winnowing window minima, in window order (with
-    * repeats — the [[winnowFingerprintRows]] row set for one doc): shingle
-    * hash = first 8 md5 hex chars as a long, window w minima over full
-    * windows only. Empty when the doc is shorter than w + k - 1 tokens.
+    * repeats): shingle hash = first 8 md5 hex chars as a long, window w
+    * minima over full windows only. Empty when the doc is shorter than
+    * w + k - 1 tokens.
     */
   private def winnowMinsJvm(md: java.security.MessageDigest, norm: String,
                             k: Int, w: Int): Array[Long] = {
@@ -200,42 +141,10 @@ object Dedup {
     out
   }
 
-  /** The exploded face of [[winnowFingerprints]]: one (`idCol`, `fp`)
-    * row per kept window minimum (NOT deduplicated — the digest flavor
-    * dedupes in its aggregate). This is the join surface for
-    * fingerprint-overlap candidate generation: `rows.join(rows, "fp")`
-    * finds every pair sharing a run, the same bucket-join shape as LSH
-    * banding.
-    */
-  def winnowFingerprintRows(df: DataFrame, idCol: String, textCol: String,
-                            shingleSize: Int = 4, window: Int = 5): DataFrame = {
-    require(shingleSize >= 1 && window >= 1, "shingle and window must be >= 1")
-    val p = df.sparkSession.sparkContext.defaultParallelism
-    val toks = split(normText(col(textCol)), " ")
-    val w = Window.partitionBy(col(idCol)).orderBy(col("__pos"))
-    val posTok = df.repartition(p, col(idCol))
-      .select(col(idCol), size(toks).as("__n"),
-        posexplode(toks).as(Seq("__pos", "__t")))
-    val leads = (1 until shingleSize).map(j => lead(col("__t"), j).over(w))
-    val shingled = posTok
-      .withColumn("__sh",
-        if (shingleSize == 1) col("__t")
-        else concat_ws(" ", (col("__t") +: leads): _*))
-      .filter(col("__pos") <= col("__n") - shingleSize)
-      .select(col(idCol), col("__pos"),
-        conv(substring(md5(col("__sh")), 1, 8), 16, 10).cast("long").as("__h"))
-    // full windows only: window start must have w-1 hashes after it
-    val frame = w.rowsBetween(Window.currentRow, window - 1)
-    shingled
-      .withColumn("__m", count(lit(1)).over(Window.partitionBy(col(idCol))))
-      .withColumn("__win_min", min(col("__h")).over(frame))
-      .filter(col("__pos") <= col("__m") - window)
-      .select(col(idCol), col("__win_min").as("fp"))
-  }
-
-  /** Fingerprint-overlap candidate pairs from [[winnowFingerprintRows]]:
-    * (id_a, id_b, n_shared) for pairs sharing at least `minShared`
-    * distinct fingerprints. Three-tier bucket discipline, the same shape
+  /** Fingerprint-overlap candidate pairs over [[winnowFingerprints]]'
+    * kept window minima: (id_a, id_b, n_shared) for pairs sharing at
+    * least `minShared` distinct fingerprints. Three-tier bucket
+    * discipline, the same shape
     * as [[minhashNearDupPairs]] — measured necessary, not theoretical: an
     * uncapped fp self-join on a dup-SATURATED corpus (the 100× probe
     * corpus: ~100 near-copies per doc, each pair sharing ~40
@@ -257,43 +166,19 @@ object Dedup {
                          minShared: Long = 2L, maxBucket: Long = 64L,
                          maxDocFreq: Long = 4096L,
                          tracker: CacheTracker = CacheTracker.unmanaged): DataFrame = {
+    require(shingleSize >= 1 && window >= 1, "shingle and window must be >= 1")
     require(maxBucket <= maxDocFreq, "maxBucket must be <= maxDocFreq")
-    // distinct (id, fp) once — a doc may emit one fp from many windows;
-    // the distinct aggregate is exchange-free (hash(id) from the winnow
-    // repartition satisfies the (id, fp) clustering). Nothing is
-    // persisted: the explicit isnotnull(fp) mirrors what the small-tier
-    // self-join would infer one-sided, keeping all three tier branches'
-    // fp-exchange subtrees canonically identical — AQE stage-reuses ONE
-    // fp exchange, so the whole winnow pipeline (text shuffle, shingle +
-    // sliding-min windows, distinct, fp-shuffle map side) executes once
-    // and each tier re-runs only its post-shuffle bucket-count window.
-    // (The old double persist re-ran nothing but materialized two
-    // corpus-proportional caches and still shuffled fp rows once.)
-    val r =
-      if (integralId(df, idCol)) {
-        // per-doc kernel: (id, fp) duplicates can only arise WITHIN a
-        // document (two windows sharing a minimum), so the distinct is
-        // doc-local too — one narrow pass emits each (id, fp) once and
-        // the corpus-wide distinct exchange disappears
-        val spark = df.sparkSession
-        import spark.implicits._
-        val p = spark.sparkContext.defaultParallelism
-        val (k, w) = (shingleSize, window)
-        restoreIdType(
-          df.repartition(p, col(idCol))
-            .select(col(idCol).cast("long"), col(textCol).cast("string"))
-            .as[(Long, String)]
-            .mapPartitions { it =>
-              val md = java.security.MessageDigest.getInstance("MD5")
-              it.flatMap { case (id, text) =>
-                if (text == null) Iterator.empty
-                else winnowMinsJvm(md, normTextJvm(text), k, w)
-                  .distinct.iterator.map(fp => (id, fp))
-              }
-            }.toDF(idCol, "fp"),
-          df, idCol)
-      } else winnowFingerprintRows(df, idCol, textCol, shingleSize, window)
-        .distinct().filter(col("fp").isNotNull)
+    // (id, fp) duplicates can only arise WITHIN a document (two windows
+    // sharing a minimum), so the distinct is doc-local: one kernel pass
+    // emits each (id, fp) once and no corpus-wide distinct exchange runs.
+    // Nothing is persisted: all three tier branches read the same fp
+    // exchange subtree, which AQE stage-reuses, so the text shuffle and
+    // the kernel execute once and each tier re-runs only its
+    // post-shuffle bucket-count window.
+    val (k, w) = (shingleSize, window)
+    val r = PerDoc.texts(df, idCol, textCol, StructField("fp", LongType, false)) {
+      (md, text) => winnowMinsJvm(md, normTextJvm(text), k, w).distinct.iterator.map(Seq(_))
+    }
     val wcnt = Window.partitionBy(col("fp"))
     val withCnt = r.withColumn("__cnt", count(lit(1)).over(wcnt))
     val small = withCnt.filter(col("__cnt") > 1 && col("__cnt") <= maxBucket)
@@ -331,9 +216,8 @@ object Dedup {
     * fully-duplicated doc comes back with clean_text = ''.
     *
     * Scale shape — full text crosses the wire exactly ONCE:
-    *  - grams are the codegen posexplode + lead-window pattern (same as
-    *    [[explodedShingles]]; array HOFs would evaluate interpreted);
-    *    the doc-keyed explode exchange is reused by the gram window;
+    *  - grams come from one [[PerDoc]] kernel pass over each doc's
+    *    token array, above the doc-keyed text exchange;
     *  - the occurrence count shuffles 16-byte digests (map-side
     *    combined), and the dup-digest join clusters by that same key;
     *  - surviving (doc, start) rows — proportional to DUPLICATED grams,
@@ -368,47 +252,23 @@ object Dedup {
     // repartitioned base (both gram branches and the rebuild join below)
     // carry canonically identical exchange subtrees, so AQE stage-reuses
     // ONE text shuffle across them and each branch re-runs only the
-    // partition-local gram pass above it (the per-doc kernel on integral
-    // ids — same parity discipline as the signature kernels — or the
-    // explode + lead-window + md5 formulation otherwise).
+    // partition-local gram kernel above it.
     // gram digests ride as 16-byte MD5 BINARY, not 32-char hex (r20):
     // __g only ever meets equality tests (the duplicate count and the
     // starts join), so the hex encoding bought nothing — the binary
     // form halves the per-token shuffle's digest bytes and skips the
-    // hex conversion in the kernel's hot loop. Both formulations
-    // change together (parity pinned).
-    val grams =
-      if (df.schema(idCol).dataType == org.apache.spark.sql.types.LongType) {
-        val spark = df.sparkSession
-        import spark.implicits._
-        based.select(col(idCol).cast("long"), col("__ts"))
-          .as[(Long, Seq[String])]
-          .mapPartitions { it =>
-            val md = java.security.MessageDigest.getInstance("MD5")
-            val sb = new java.lang.StringBuilder
-            it.flatMap { case (id, ts) =>
-              if (ts.length < k) Iterator.empty
-              else (0 to ts.length - k).iterator.map { s =>
-                sb.setLength(0)
-                var j = 0
-                while (j < k) { if (j > 0) sb.append(' '); sb.append(ts(s + j)); j += 1 }
-                md.reset()
-                (id, s, md.digest(
-                  sb.toString.getBytes(java.nio.charset.StandardCharsets.UTF_8)))
-              }
-            }
-          }.toDF(idCol, "__pos", "__g")
-      } else {
-        val posTok = based
-          .select(col(idCol), posexplode(col("__ts")).as(Seq("__pos", "__t")))
-        val w = Window.partitionBy(col(idCol)).orderBy(col("__pos"))
-        val leads = (1 until k).map(j => lead(col("__t"), j).over(w))
-        posTok
-          .withColumn("__g", unhex(md5(concat_ws(" ", (col("__t") +: leads): _*))))
-          .withColumn("__last", leads.last) // window exprs can't sit in filter()
-          .filter(col("__last").isNotNull)
-          .select(col(idCol), col("__pos"), col("__g"))
-      }
+    // hex conversion in the kernel's hot loop.
+    val grams = PerDoc.map[scala.collection.Seq[String]](based, idCol, col("__ts"),
+        StructField("__pos", IntegerType, false), StructField("__g", BinaryType)) {
+      (md, ts) =>
+        val sb = new java.lang.StringBuilder
+        (0 to ts.length - k).iterator.map { s =>
+          sb.setLength(0)
+          var j = 0
+          while (j < k) { if (j > 0) sb.append(' '); sb.append(ts(s + j)); j += 1 }
+          Seq(s, md5Bytes(md, sb.toString))
+        }
+    }
     val dup = grams.groupBy(col("__g"))
       .agg(count(lit(1)).as("__c")).filter(col("__c") > 1)
       .select(col("__g"))
@@ -436,23 +296,25 @@ object Dedup {
   // The signature functions below compute a whole document's signature in
   // ONE narrow mapPartitions pass (tokenize → shingle → hash → per-lane
   // min / digest set) instead of exploding (doc, shingle) rows through
-  // the window + hash-aggregate pipeline. Motivation (r19 ShingleProbe,
-  // sf0.1, warm): the exploded formulation pays the window sort, the
-  // generator, and the aggregate hash table per SHINGLE; the per-doc
-  // kernel pays a few array ops — 2-3× less CPU for identical output —
-  // and at cluster scale it also DELETES the aggregate (the per-doc pass
-  // needs no post-explode combine at all). Exchange count is unchanged:
-  // one fixed-width doc exchange feeds the CPU-bound kernel, exactly as
-  // it fed the window. Hashes are computed by the SAME engine primitives
-  // Spark's expressions call (java.util.regex / UTF8String.trim /
-  // UTF8String.toLowerCase / XXH64.hashUTF8String / MD5 over UTF-8
-  // bytes), so equality is by construction, and the kernel-parity spec
-  // pins it over adversarial unicode/whitespace corpora. The kernels
-  // serve integral-id inputs (the engine-wide doc_id contract); other id
-  // types fall back to the exploded formulation. Contract note: ids are
-  // keys (one row per input row) — the old aggregate MERGED rows sharing
-  // an id, which no well-formed corpus has (same key discipline as the
-  // null-key drop rule).
+  // the window + hash-aggregate pipeline. Motivation (r19, sf0.1, warm;
+  // OPTIMIZATION_r19.md §3): the exploded formulation pays the window
+  // sort, the generator, and the aggregate hash table per SHINGLE; the
+  // per-doc kernel pays a few array ops — 2-3× less CPU for identical
+  // output — and at cluster scale it also DELETES the aggregate (the
+  // per-doc pass needs no post-explode combine at all). Exchange count is
+  // unchanged: one fixed-width doc exchange feeds the CPU-bound kernel,
+  // exactly as it fed the window. Hashes are computed by the SAME engine
+  // primitives Spark's expressions call (java.util.regex /
+  // UTF8String.trim / UTF8String.toLowerCase / XXH64.hashUTF8String /
+  // MD5 over UTF-8 bytes), so equality with the SQL formulation is by
+  // construction; SignatureKernelParitySpec pins every kernel to the
+  // exploded formulations (kept in src/test as the oracle) over
+  // adversarial unicode/whitespace corpora.
+  //
+  // One contract for every id type, owned by [[PerDoc]]: one output row
+  // (or row set) per input row — ids are keys, rows sharing an id are
+  // never merged; rows with a null id or null text are dropped; the id
+  // column comes back with its input name and data type.
 
   private val wsPattern = java.util.regex.Pattern.compile("\\s+")
 
@@ -466,9 +328,9 @@ object Dedup {
       .trim().toLowerCase().toString
   }
 
-  /** One document's shingle rows ([[explodedShingles]] semantics): k
-    * consecutive tokens joined by one space; a doc shorter than k tokens
-    * contributes its whole normalized text as a single shingle.
+  /** One document's shingles: k consecutive tokens joined by one space;
+    * a doc shorter than k tokens contributes its whole normalized text as
+    * a single shingle.
     */
   private[operators] def shinglesJvm(norm: String, k: Int): Array[String] = {
     val toks = norm.split(" ", -1)
@@ -552,8 +414,16 @@ object Dedup {
     (minHex, if (set == null) null else set.toArray(new Array[String](set.size)))
   }
 
-  /** xxhash64-flavor lanes for one doc ([[kmLanes]] algebra: h1, then
-    * h1 XOR rotl(h2, i)); optionally also the distinct h1 digest set.
+  /** xxhash64-flavor lanes for one doc; optionally also the distinct h1
+    * digest set. Per-lane hashes via double hashing: TWO xxhash64
+    * evaluations per shingle (h1 = xxhash64(sh), h2 = xxhash64(1, sh))
+    * expanded to `n` lanes as `lane_i = h1 XOR rotl(h2, i)` — the
+    * rotate-XOR variant of Kirsch-Mitzenmacher (the classic `h1 + i·h2`
+    * needs wrapping long arithmetic, which ANSI mode rejects in the SQL
+    * formulation; rotation + XOR is overflow-free and keeps each lane a
+    * distinct mixing of the 128 hash bits). Hashing dominates the stage,
+    * so 2 string hashes + bitwise ops beat `n` seeded string hashes while
+    * preserving minhash's per-lane collision statistics.
     */
   private def xxLanesJvm(norm: String, k: Int, n: Int, withSet: Boolean)
       : (Array[Long], Array[Long]) = {
@@ -586,134 +456,55 @@ object Dedup {
     (mins, setArr)
   }
 
-  /** Integral id types served by the kernels (cast to long and back). */
-  private[operators] def integralId(df: DataFrame, idCol: String): Boolean =
-    df.schema(idCol).dataType match {
-      case org.apache.spark.sql.types.LongType |
-           org.apache.spark.sql.types.IntegerType => true
-      case _ => false
-    }
-
-  private[operators] def restoreIdType(out: DataFrame, df: DataFrame, idCol: String): DataFrame =
-    df.schema(idCol).dataType match {
-      case org.apache.spark.sql.types.LongType => out
-      case dt => out.withColumn(idCol, col(idCol).cast(dt))
-    }
-
   /** Distinct (`idCol`, `__g` = md5(shingle)) rows per document — the
     * digest face the decontamination and boilerplate pipelines share.
-    * (id, digest) duplicates are doc-local, so on long ids one narrow
-    * per-doc pass emits each digest once (kernel discipline above);
-    * other id types run the exploded window + distinct formulation.
+    * (id, digest) duplicates are doc-local, so one [[PerDoc]] pass emits
+    * each digest once.
     */
   def distinctGramDigests(df: DataFrame, idCol: String, textCol: String,
-                          shingleSize: Int): DataFrame =
-    if (df.schema(idCol).dataType == org.apache.spark.sql.types.LongType) {
-      val spark = df.sparkSession
-      import spark.implicits._
-      val p = spark.sparkContext.defaultParallelism
-      val k = shingleSize
-      df.repartition(p, col(idCol))
-        .select(col(idCol).cast("long"), col(textCol).cast("string"))
-        .as[(Long, String)]
-        .mapPartitions { it =>
-          val md = java.security.MessageDigest.getInstance("MD5")
-          it.flatMap { case (id, text) =>
-            if (text == null) Iterator.empty
-            else {
-              val set = new java.util.LinkedHashSet[String]()
-              shinglesJvm(normTextJvm(text), k)
-                .foreach(sh => set.add(md5HexJvm(md, sh)))
-              scala.jdk.CollectionConverters.IteratorHasAsScala(set.iterator())
-                .asScala.map(g => (id, g))
-            }
-          }
-        }.toDF(idCol, "__g")
-    } else explodedShingles(df, idCol, textCol, shingleSize)
-      .select(col(idCol), md5(col("__sh")).as("__g")).distinct()
-
-  /** Per-doc TOTAL and DISTINCT shingle counts ([[explodedShingles]]
-    * semantics — short docs contribute their whole text as one shingle,
-    * null text drops the doc). Both aggregates are DOC-LOCAL, so on long
-    * ids the whole computation runs as one narrow per-doc kernel pass —
-    * no exploded shingle rows, no countDistinct hash aggregate over the
-    * corpus; other id types keep the exploded formulation (the parity
-    * reference, pinned in SignatureKernelParitySpec).
-    * Output: (`idCol`, `total_shingles`, `distinct_shingles`).
-    */
-  def shingleRepeatStats(df: DataFrame, idCol: String, textCol: String,
-                         shingleSize: Int): DataFrame =
-    if (df.schema(idCol).dataType == org.apache.spark.sql.types.LongType) {
-      val spark = df.sparkSession
-      import spark.implicits._
-      val p = spark.sparkContext.defaultParallelism
-      val k = shingleSize
-      df.repartition(p, col(idCol))
-        .select(col(idCol).cast("long"), col(textCol).cast("string"))
-        .as[(Long, String)]
-        .mapPartitions(_.flatMap { case (id, text) =>
-          if (text == null) Iterator.empty
-          else {
-            val sh = shinglesJvm(normTextJvm(text), k)
-            val set = new java.util.HashSet[String]()
-            var i = 0
-            while (i < sh.length) { set.add(sh(i)); i += 1 }
-            Iterator.single((id, sh.length.toLong, set.size.toLong))
-          }
-        }).toDF(idCol, "total_shingles", "distinct_shingles")
-    } else explodedShingles(df, idCol, textCol, shingleSize)
-      .groupBy(col(idCol))
-      .agg(count(lit(1)).as("total_shingles"),
-        countDistinct(col("__sh")).as("distinct_shingles"))
-
-  /** Per-lane hash columns via double hashing: TWO xxhash64 evaluations
-    * per shingle expanded to `numHashes` lanes as
-    * `lane_i = h1 XOR rotl(h2, i)` — the rotate-XOR variant of
-    * Kirsch-Mitzenmacher (the classic `h1 + i·h2` needs wrapping long
-    * arithmetic, which ANSI mode rejects; rotation + XOR is overflow-free
-    * and keeps each lane a distinct mixing of the 128 hash bits). Hashing
-    * dominates the signature stage, so 2 string hashes + bitwise ops beat
-    * `numHashes` seeded string hashes while preserving minhash's
-    * per-lane collision statistics.
-    */
-  private def kmLanes(sh: Column, numHashes: Int): Seq[Column] = {
-    require(numHashes <= 64, "rotate-distinct lanes cap at 64")
-    val h1 = xxhash64(sh)
-    val h2 = xxhash64(lit(1), sh)
-    (0 until numHashes).map {
-      case 0 => h1
-      case i => h1.bitwiseXOR(
-        shiftleft(h2, i).bitwiseOR(shiftrightunsigned(h2, 64 - i)))
+                          shingleSize: Int): DataFrame = {
+    val k = shingleSize
+    PerDoc.texts(df, idCol, textCol, StructField("__g", StringType)) { (md, text) =>
+      val set = new java.util.LinkedHashSet[String]()
+      shinglesJvm(normTextJvm(text), k).foreach(sh => set.add(md5HexJvm(md, sh)))
+      set.iterator().asScala.map(Seq(_))
     }
   }
 
-  /** doc → MinHash signature (array of `numHashes` longs), one codegen'd
-    * aggregate over exploded shingles. Engine flavor: two `xxhash64`
-    * evaluations per shingle expanded to all lanes via [[kmLanes]].
+  /** Per-doc TOTAL and DISTINCT shingle counts (short docs contribute
+    * their whole text as one shingle, null text drops the doc). Both
+    * counts are DOC-LOCAL, so the whole computation is one [[PerDoc]]
+    * pass — no exploded shingle rows, no countDistinct hash aggregate
+    * over the corpus.
+    * Output: (`idCol`, `total_shingles`, `distinct_shingles`).
+    */
+  def shingleRepeatStats(df: DataFrame, idCol: String, textCol: String,
+                         shingleSize: Int): DataFrame = {
+    val k = shingleSize
+    PerDoc.texts(df, idCol, textCol, StructField("total_shingles", LongType, false),
+        StructField("distinct_shingles", LongType, false)) { (_, text) =>
+      val sh = shinglesJvm(normTextJvm(text), k)
+      val set = new java.util.HashSet[String]()
+      var i = 0
+      while (i < sh.length) { set.add(sh(i)); i += 1 }
+      Iterator.single(Seq(sh.length.toLong, set.size.toLong))
+    }
+  }
+
+  /** doc → MinHash signature (array of `numHashes` longs). Engine
+    * flavor: two `xxhash64` evaluations per shingle expanded to all lanes
+    * (see [[xxLanesJvm]]).
     */
   def minhashSignature(df: DataFrame, idCol: String, textCol: String,
-                       shingleSize: Int = 3, numHashes: Int = 16): DataFrame =
-    if (!integralId(df, idCol))
-      explodedShingles(df, idCol, textCol, shingleSize)
-        .groupBy(col(idCol))
-        .agg(array(kmLanes(col("__sh"), numHashes).map(min): _*).as("sig"))
-    else {
-      val spark = df.sparkSession
-      import spark.implicits._
-      val p = spark.sparkContext.defaultParallelism
-      val (k, n) = (shingleSize, numHashes)
-      val rows = df.repartition(p, col(idCol))
-        .select(col(idCol).cast("long"), col(textCol).cast("string"))
-        .as[(Long, String)]
-        .mapPartitions(_.flatMap { case (id, text) =>
-          if (text == null) Iterator.empty
-          else Iterator.single((id, xxLanesJvm(normTextJvm(text), k, n,
-            withSet = false)._1.toSeq))
-        })
-      restoreIdType(rows.toDF(idCol, "sig"), df, idCol)
+                       shingleSize: Int = 3, numHashes: Int = 16): DataFrame = {
+    require(numHashes <= 64, "rotate-distinct lanes cap at 64")
+    val (k, n) = (shingleSize, numHashes)
+    PerDoc.texts(df, idCol, textCol, StructField("sig", ArrayType(LongType, false))) {
+      (_, text) => Iterator.single(Seq(xxLanesJvm(normTextJvm(text), k, n, withSet = false)._1))
     }
+  }
 
-  /** Portable signature flavor: ONE `md5(shingle)` per exploded row, with
+  /** Portable signature flavor: ONE `md5(shingle)` per shingle, with
     * lane `i` = lexicographic min of the digest's i-th disjoint 4-hex-char
     * (16-bit) slice — bit-identical in any engine with md5; this is what
     * the DuckDB correctness oracle reproduces.
@@ -724,89 +515,35 @@ object Dedup {
     * 16-bit lanes give a ~m/65536 min-collision bias for m-shingle docs
     * (<1% at typical document sizes) — fine for signatures/banding. The
     * production engine flavor ([[minhashSignature]]) keeps full 64-bit
-    * xxhash64 lanes.
+    * xxhash64 lanes. Output: (`idCol`, `mh0` .. `mh{numHashes-1}`).
     */
-  /** The md5 lane aggregates shared by both md5-flavor entry points:
-    * lane i = lexicographic min of the digest's i-th 4-hex-char slice.
-    */
-  private def md5LaneAggs(numHashes: Int): Seq[Column] = {
-    require(numHashes * 4 <= 32, "md5 is 32 hex chars: at most 8 disjoint 4-char lanes")
-    (0 until numHashes).map(i =>
-      min(substring(col("__d"), i * 4 + 1, 4)).as(s"mh$i"))
+  def minhashSignatureMd5(df: DataFrame, idCol: String, textCol: String,
+                          shingleSize: Int = 3, numHashes: Int = 8): DataFrame = {
+    val (k, n) = (shingleSize, numHashes)
+    PerDoc.texts(df, idCol, textCol, md5LaneFields(n): _*) { (md, text) =>
+      Iterator.single(md5LanesJvm(md, normTextJvm(text), k, n, withSet = false)._1.toSeq)
+    }
   }
 
-  def minhashSignatureMd5(df: DataFrame, idCol: String, textCol: String,
-                          shingleSize: Int = 3, numHashes: Int = 8): DataFrame =
-    if (!integralId(df, idCol)) {
-      val aggs = md5LaneAggs(numHashes)
-      explodedShingles(df, idCol, textCol, shingleSize)
-        // digest once per shingle in a projection so no aggregate re-hashes
-        .select(col(idCol), md5(col("__sh")).as("__d"))
-        .groupBy(col(idCol))
-        .agg(aggs.head, aggs.tail: _*)
-    } else {
-      require(numHashes * 4 <= 32, "md5 is 32 hex chars: at most 8 disjoint 4-char lanes")
-      val spark = df.sparkSession
-      import spark.implicits._
-      val p = spark.sparkContext.defaultParallelism
-      val (k, n) = (shingleSize, numHashes)
-      val rows = df.repartition(p, col(idCol))
-        .select(col(idCol).cast("long"), col(textCol).cast("string"))
-        .as[(Long, String)]
-        .mapPartitions { it =>
-          val md = java.security.MessageDigest.getInstance("MD5")
-          it.flatMap { case (id, text) =>
-            if (text == null) Iterator.empty
-            else Iterator.single((id,
-              md5LanesJvm(md, normTextJvm(text), k, n, withSet = false)._1.toSeq))
-          }
-        }
-      restoreIdType(
-        rows.toDF(idCol, "__lanes")
-          .select(col(idCol) +:
-            (0 until n).map(i => col("__lanes")(i).as(s"mh$i")): _*),
-        df, idCol)
-    }
+  /** The md5 lane columns shared by both md5-flavor entry points. */
+  private def md5LaneFields(numHashes: Int): Seq[StructField] = {
+    require(numHashes * 4 <= 32, "md5 is 32 hex chars: at most 8 disjoint 4-char lanes")
+    (0 until numHashes).map(i => StructField(s"mh$i", StringType))
+  }
 
   /** [[minhashSignatureMd5]] plus each doc's exact distinct shingle set
-    * (`sh`), from ONE exploded pass and one aggregate — the shape a
-    * candidate-verify step wants, so the shingle pipeline never runs
-    * twice (and never through the ~10× slower interpreted array path).
+    * (`sh`), from ONE kernel pass — the shape a candidate-verify step
+    * wants, so the shingle pipeline never runs twice.
     */
   def minhashSignatureMd5WithSets(df: DataFrame, idCol: String, textCol: String,
-                                  shingleSize: Int = 3, numHashes: Int = 8): DataFrame =
-    if (!integralId(df, idCol)) {
-      val aggs = md5LaneAggs(numHashes) :+ collect_set(col("__sh")).as("sh")
-      explodedShingles(df, idCol, textCol, shingleSize)
-        .select(col(idCol), col("__sh"), md5(col("__sh")).as("__d"))
-        .groupBy(col(idCol))
-        .agg(aggs.head, aggs.tail: _*)
-    } else {
-      require(numHashes * 4 <= 32, "md5 is 32 hex chars: at most 8 disjoint 4-char lanes")
-      val spark = df.sparkSession
-      import spark.implicits._
-      val p = spark.sparkContext.defaultParallelism
-      val (k, n) = (shingleSize, numHashes)
-      val rows = df.repartition(p, col(idCol))
-        .select(col(idCol).cast("long"), col(textCol).cast("string"))
-        .as[(Long, String)]
-        .mapPartitions { it =>
-          val md = java.security.MessageDigest.getInstance("MD5")
-          it.flatMap { case (id, text) =>
-            if (text == null) Iterator.empty
-            else {
-              val (lanes, set) = md5LanesJvm(md, normTextJvm(text), k, n,
-                withSet = true)
-              Iterator.single((id, lanes.toSeq, set.toSeq))
-            }
-          }
-        }
-      restoreIdType(
-        rows.toDF(idCol, "__lanes", "sh")
-          .select(col(idCol) +:
-            (0 until n).map(i => col("__lanes")(i).as(s"mh$i")) :+ col("sh"): _*),
-        df, idCol)
+                                  shingleSize: Int = 3, numHashes: Int = 8): DataFrame = {
+    val (k, n) = (shingleSize, numHashes)
+    PerDoc.texts(df, idCol, textCol,
+        md5LaneFields(n) :+ StructField("sh", ArrayType(StringType)): _*) { (md, text) =>
+      val (lanes, set) = md5LanesJvm(md, normTextJvm(text), k, n, withSet = true)
+      Iterator.single(lanes.toSeq :+ set)
     }
+  }
 
   /** Exact Jaccard between two docs' shingle sets (verification step —
     * only ever run on LSH candidate pairs, never all pairs).
@@ -824,8 +561,8 @@ object Dedup {
                           tracker: CacheTracker = CacheTracker.unmanaged): DataFrame = {
     require(numHashes % bands == 0, "numHashes must be divisible by bands")
     val r = numHashes / bands
-    // one codegen'd aggregate produces signature AND shingle-DIGEST set
-    // per doc; the verify step intersects 8-byte xxhash64 digests, not
+    // one kernel pass produces signature AND shingle-DIGEST set per
+    // doc; the verify step intersects 8-byte xxhash64 digests, not
     // shingle strings — set jaccard over distinct digests equals string
     // jaccard (collisions are 2^-64-scale), the cached/shuffled rows
     // shrink ~3×, and array_intersect runs integer-typed. (The
@@ -834,43 +571,23 @@ object Dedup {
     // branches reference it (banding + both candidate join-backs) and
     // Catalyst does not CSE subplans — at cluster scale this is the
     // table you would checkpoint anyway.
-    val base = {
-      // fast path pinned to LONG ids here (no restore point for the pair
-      // outputs' id columns, unlike the signature functions)
-      if (df.schema(idCol).dataType != org.apache.spark.sql.types.LongType)
-        explodedShingles(df.select(col(idCol).as("__id"), col(textCol)),
-          "__id", textCol, shingleSize)
-          .groupBy(col("__id"))
-          .agg(
-            array(kmLanes(col("__sh"), numHashes).map(min): _*).as("sig"),
-            collect_set(xxhash64(col("__sh"))).as("__shset"))
-      else {
-        val spark = df.sparkSession
-        import spark.implicits._
-        val p = spark.sparkContext.defaultParallelism
-        val (k, n) = (shingleSize, numHashes)
-        df.repartition(p, col(idCol))
-          .select(col(idCol).cast("long"), col(textCol).cast("string"))
-          .as[(Long, String)]
-          .mapPartitions(_.flatMap { case (id, text) =>
-            if (text == null) Iterator.empty
-            else {
-              val (lanes, set) = xxLanesJvm(normTextJvm(text), k, n,
-                withSet = true)
-              Iterator.single((id, lanes.toSeq, set.toSeq))
-            }
-          })
-          .toDF("__id", "sig", "__shset")
-      }
-    }.transform(d => tracker.own(
-      d.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)))
+    require(numHashes <= 64, "rotate-distinct lanes cap at 64")
+    val (k, n) = (shingleSize, numHashes)
+    val base = PerDoc.texts(df, idCol, textCol,
+        StructField("sig", ArrayType(LongType, false)),
+        StructField("__shset", ArrayType(LongType, false))) { (_, text) =>
+      val (lanes, set) = xxLanesJvm(normTextJvm(text), k, n, withSet = true)
+      Iterator.single(Seq(lanes, set))
+    }.withColumnRenamed(idCol, "__id")
+      .transform(d => tracker.own(
+        d.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)))
     val banded = base.select(col("__id"),
       // full-signature hash: the chain sort key for oversized buckets —
       // identical signatures (true dup clusters) sort adjacent.
       // xxhash64 hashes array<long> NATIVELY — hashing the long slices
       // directly (not cast("array<string>") + concat_ws, which allocates
       // a string per lane per row) measured ~0.2 s off the sf0.1 pipeline
-      // (tools/MinhashFlavorProbe variant D vs A)
+      // (SURVEY.md, r7 twin-flavor attribution)
       xxhash64(col("sig")).as("__sk"),
       posexplode(
         transform(sequence(lit(0), lit(bands - 1)),
@@ -1096,54 +813,17 @@ object Dedup {
 
   // -------------------------------------------------------------- simhash
 
-  /** 64-bit SimHash over word tokens. Explode + groupBy keeps it one
-    * shuffle with map-side partial aggregation (each of the 64 bit-votes
-    * is a plain SUM) — scales linearly in corpus size.
+  /** 64-bit SimHash over word tokens: one [[PerDoc]] pass behind the
+    * fixed-width doc exchange — distinct-token counts, votes and the bit
+    * assembly are all doc-local. Tokens are counted per distinct token
+    * BEFORE hashing: the vote sum per occurrence (±1 each) equals ±count
+    * per distinct token, so the hash runs once per distinct token per
+    * doc — a 2-5× CPU cut on natural text.
     */
-  def simhash(df: DataFrame, idCol: String, textCol: String): DataFrame = {
-    // same fixed-width repartition guard as explodedShingles: the
-    // hash+vote stage is CPU-bound and would otherwise inherit the scan's
-    // partition count (1 for a single small file) — and AQE exempts
-    // fixed-numPartitions repartitions from coalescing it back down.
-    //
-    // Tokens are counted per (doc, distinct token) BEFORE hashing: the
-    // vote sum per occurrence (±1 each) equals ±count per distinct token,
-    // so the hash runs once per distinct token per doc — a 2-5× CPU cut
-    // on natural text. The id-hash partitioning satisfies the (id, token)
-    // clustering (id is a subset of the keys), so neither groupBy adds an
-    // exchange: one shuffle total, as before.
-    if (integralId(df, idCol)) {
-      // per-doc kernel flavor (same rationale and parity discipline as
-      // the minhash signature kernels above): distinct-token counts,
-      // votes and the bit assembly all happen inside one narrow pass
-      val spark = df.sparkSession
-      import spark.implicits._
-      val p = spark.sparkContext.defaultParallelism
-      val rows = df.repartition(p, col(idCol))
-        .select(col(idCol).cast("long"), col(textCol).cast("string"))
-        .as[(Long, String)]
-        .mapPartitions(_.flatMap { case (id, text) =>
-          if (text == null) Iterator.empty
-          else Iterator.single((id, simhashVotesJvm(normTextJvm(text))))
-        })
-      return restoreIdType(rows.toDF(idCol, "simhash"), df, idCol)
+  def simhash(df: DataFrame, idCol: String, textCol: String): DataFrame =
+    PerDoc.texts(df, idCol, textCol, StructField("simhash", LongType, false)) {
+      (_, text) => Iterator.single(Seq(simhashVotesJvm(normTextJvm(text))))
     }
-    val p = df.sparkSession.sparkContext.defaultParallelism
-    val tok = df.repartition(p, col(idCol))
-      .select(col(idCol),
-        explode(split(normText(col(textCol)), " ")).as("__t"))
-      .groupBy(col(idCol), col("__t")).agg(count(lit(1)).as("__c"))
-      .withColumn("__h", xxhash64(col("__t")))
-    val votes = (0 until 64).map { j =>
-      sum(when(shiftright(col("__h"), j).bitwiseAND(1) === 1, col("__c"))
-        .otherwise(-col("__c"))).as(s"v$j")
-    }
-    val agg = tok.groupBy(col(idCol)).agg(votes.head, votes.tail: _*)
-    val bits = (0 until 64).map { j =>
-      when(col(s"v$j") > 0, lit(1L) * pow2(j)).otherwise(0L)
-    }
-    agg.select(col(idCol), bits.reduce(_ + _).as("simhash"))
-  }
 
   /** One document's 64 SimHash bit-votes folded to the final BIGINT
     * value — [[simhash]]'s xxhash64 algebra verbatim.
@@ -1210,63 +890,20 @@ object Dedup {
     new String(out)
   }
 
-  private def pow2(j: Int): Column = lit(if (j == 63) Long.MinValue else 1L << j)
-
   /** Portable SimHash flavor: 64 bit-votes from the first 16 hex chars of
     * `md5(token)`, emitted as a 16-hex-char string — bit-identical in any
     * engine with md5 (the DuckDB oracle reproduces it). A hex-string
     * output sidesteps cross-engine signed-64-bit shift/overflow semantics
     * entirely; the production path stays [[simhash]] (xxhash64, BIGINT).
     *
-    * Nibble decoding is `ascii(c) - (c >= 'a' ? 87 : 48)` — portable where
-    * hex→int conversion functions are not.
+    * In SQL (the DuckDB oracle) nibble decoding is
+    * `ascii(c) - (c >= 'a' ? 87 : 48)` — portable where hex→int
+    * conversion functions are not.
     */
-  def simhashMd5(df: DataFrame, idCol: String, textCol: String): DataFrame = {
-    // fixed-width repartition guard + count-weighted distinct-token votes
-    // (±count ≡ per-occurrence ±1) — see simhash; md5 dominates this
-    // stage, so hashing once per distinct token per doc is the whole win
-    if (integralId(df, idCol)) {
-      // per-doc kernel flavor (same parity discipline as the minhash
-      // signature kernels)
-      val spark = df.sparkSession
-      import spark.implicits._
-      val pk = spark.sparkContext.defaultParallelism
-      val rows = df.repartition(pk, col(idCol))
-        .select(col(idCol).cast("long"), col(textCol).cast("string"))
-        .as[(Long, String)]
-        .mapPartitions { it =>
-          val md = java.security.MessageDigest.getInstance("MD5")
-          it.flatMap { case (id, text) =>
-            if (text == null) Iterator.empty
-            else Iterator.single((id, simhashHexJvm(md, normTextJvm(text))))
-          }
-        }
-      return restoreIdType(rows.toDF(idCol, "simhash_hex"), df, idCol)
+  def simhashMd5(df: DataFrame, idCol: String, textCol: String): DataFrame =
+    PerDoc.texts(df, idCol, textCol, StructField("simhash_hex", StringType)) {
+      (md, text) => Iterator.single(Seq(simhashHexJvm(md, normTextJvm(text))))
     }
-    val p = df.sparkSession.sparkContext.defaultParallelism
-    val tok = df.repartition(p, col(idCol))
-      .select(col(idCol),
-        explode(split(normText(col(textCol)), " ")).as("__t"))
-      .groupBy(col(idCol), col("__t")).agg(count(lit(1)).as("__c"))
-      .select(col(idCol), col("__c"), substring(md5(col("__t")), 1, 16).as("__dg"))
-    val nibs = (0 until 16).map { h =>
-      val a = ascii(substring(col("__dg"), h + 1, 1))
-      when(a >= 97, a - 87).otherwise(a - 48).as(s"__n$h")
-    }
-    val withNibs = tok.select(col(idCol) +: col("__c") +: nibs: _*)
-    val votes = (0 until 64).map { j =>
-      sum(when(shiftright(col(s"__n${j / 4}"), j % 4).bitwiseAND(1) === 1, col("__c"))
-        .otherwise(-col("__c"))).as(s"v$j")
-    }
-    val agg = withNibs.groupBy(col(idCol)).agg(votes.head, votes.tail: _*)
-    val hexChars = (0 until 16).map { h =>
-      val nibVal = (0 until 4).map(b =>
-        when(col(s"v${4 * h + b}") > 0, lit(1 << b)).otherwise(lit(0)))
-        .reduce(_ + _)
-      substr(lit("0123456789abcdef"), nibVal + 1, lit(1))
-    }
-    agg.select(col(idCol), concat(hexChars: _*).as("simhash_hex"))
-  }
 
   /** SimHash near-dup candidates: docs within `maxHamming` bits. Blocking
     * on 16-bit chunks (a pair within Hamming distance 3 must agree on at

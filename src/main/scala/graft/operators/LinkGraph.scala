@@ -113,8 +113,9 @@ object LinkGraph {
     require(dampNum > 0 && dampNum < dampDen, "need 0 < dampNum < dampDen")
     val spark = nodes.sparkSession
     // driver-side long constant so the SQL literals below never ride on
-    // 32-bit intermediate arithmetic (ANSI mode faults int overflow)
-    val tnum = (dampDen - dampNum) * totalScale
+    // 32-bit intermediate arithmetic (ANSI mode faults int overflow);
+    // multiplyExact so an oversized totalScale fails instead of wrapping
+    val tnum = Math.multiplyExact(dampDen - dampNum, totalScale)
     // materialize the caller's edge pipeline ONCE: it feeds both the
     // out-degree aggregate and the contribution join side, and the count
     // sizes the loop's partitioning (same measured-width discipline as
@@ -185,7 +186,7 @@ object LinkGraph {
       .persist(StorageLevel.MEMORY_AND_DISK)
     val bigW = ns.agg(coalesce(sum("w"), lit(0L)).as("s")).head.getLong(0)
     require(bigW > 0, "total reset weight must be positive")
-    val tden = dampDen * bigW
+    val tden = Math.multiplyExact(dampDen, bigW)
     e1.unpersist(blocking = false)
     var ranksCk = ns.select(col("id"), col("__dang"), lit(totalScale / n).as("r"))
       .localCheckpoint(eager = true)
@@ -298,7 +299,7 @@ object LinkGraph {
       keyW.indices.toArray.flatMap(g => Array.fill(keyW(g).length)(g))
     val bigW = w.foldLeft(0L)(addExact)
     require(bigW > 0, "total reset weight must be positive")
-    val tden = dampDen * bigW
+    val tden = Math.multiplyExact(dampDen, bigW)
     val srcKeys = keysOf((es, 0))
     val outdeg = new Array[Long](srcKeys.length)
     val srcDeg = slotsOf(es, 0, srcKeys)

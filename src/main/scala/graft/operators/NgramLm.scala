@@ -1,7 +1,10 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{LongType, StringType, StructField}
+
+import scala.jdk.CollectionConverters._
 
 /** Count-based n-gram language model with stupid backoff — the
   * perplexity-style quality filter a crawl-curation pipeline runs after
@@ -45,10 +48,6 @@ object NgramLm {
 
   /** Fixed-point scale: scores live in [0, Scale]. */
   val Scale = 1000000L
-
-  /** Lower-cased whitespace tokens, order and duplicates preserved. */
-  private def toks(c: Column): Column =
-    split(lower(TextAnalysis.normWs(c)), " ")
 
   /** Per-partition tagged gram-count partials over normalized token
     * streams (r19, the [[TextAnalysis.adjacentPairCounts]] kernel shape
@@ -157,81 +156,42 @@ object NgramLm {
   }
 
   /** Per-doc gram rows with doc-local OCCURRENCE counts — the scoring
-    * input. On long ids one narrow per-doc kernel pass (the signature-
-    * kernel discipline; repeated grams collapse to one row with __occ,
-    * shrinking the model joins); other id types keep the exploded
-    * formulation with __occ = 1 per occurrence row (the parity
-    * reference). Output: (idCol, w1[, w2[, w3]], __occ). NARROW on both
-    * paths — the old explode shape never exchanged text and neither
-    * does the kernel: the win is JVM tokenization (the interpreted
-    * arrays_zip/slice explode measured ~0.6 s/task) plus doc-local
-    * occurrence collapsing ahead of the model joins. (r20: a
-    * [[Widen]]-gated kernel input was tried and REVERTED — the widening
-    * exchange plus the extra per-partition partials measured slower
-    * than the narrow pass at bench scale, confirming the r19 finding;
-    * at 100 TB the scan is wide on its own.)
+    * input, from one [[PerDoc]] kernel pass (repeated grams collapse to
+    * one row with __occ, shrinking the model joins). Output: (idCol,
+    * w1[, w2[, w3]], __occ); null ids and null texts drop. NARROW — the
+    * pass runs over the scan's own partitioning and never exchanges
+    * text: the win is JVM tokenization (the interpreted arrays_zip/slice
+    * explode it replaced measured ~0.6 s/task) plus doc-local occurrence
+    * collapsing ahead of the model joins. (r20: a [[Widen]]-gated kernel
+    * input was tried and REVERTED — the widening exchange plus the extra
+    * per-partition partials measured slower than the narrow pass at
+    * bench scale, confirming the r19 finding; at 100 TB the scan is wide
+    * on its own.)
     */
   private def docGramCounts(docs: DataFrame, idCol: String, textCol: String,
                             order: Int): DataFrame = {
-    val spark = docs.sparkSession
-    import spark.implicits._
-    // r20: same integral-id dispatch as the Dedup kernels (int ids take
-    // the kernel too, cast to long and restored below). Null ids are
-    // DROPPED on both paths, before the kernel's non-nullable encoder —
-    // a null id carries no identity to aggregate under, and the old
-    // behavior was a runtime encoder error on the kernel path vs a null
-    // group on the exploded path (divergent failure modes, ADVICE r19)
-    val keyed = docs.filter(col(idCol).isNotNull)
-    if (Dedup.integralId(docs, idCol)) {
-      val rows = keyed
-        .select(col(idCol).cast("long"), col(textCol).cast("string"))
-        .as[(Long, String)]
-        .mapPartitions(_.flatMap { case (id, text) =>
-          if (text == null) Iterator.empty
-          else {
-            val t = Dedup.normTextJvm(text).split(" ")
-            val m = new java.util.HashMap[String, java.lang.Long]()
-            val sb = new java.lang.StringBuilder
-            var i = 0
-            while (i + order - 1 < t.length) {
-              sb.setLength(0)
-              var j = 0
-              while (j < order) {
-                if (j > 0) sb.append(' '); sb.append(t(i + j)); j += 1
-              }
-              val k = sb.toString
-              val prev = m.get(k)
-              m.put(k, if (prev == null) 1L else prev.longValue + 1L)
-              i += 1
-            }
-            scala.jdk.CollectionConverters.MapHasAsScala(m).asScala.iterator
-              .map { case (k, c) => (id, k, c.longValue) }
-          }
-        }).toDF(idCol, "__g", "__occ")
-      val parts = split(col("__g"), " ")
-      Dedup.restoreIdType(
-        rows.select(col(idCol) +: (0 until order).map(j =>
-          parts.getItem(j).as(s"w${j + 1}")) :+ col("__occ"): _*),
-        docs, idCol)
-    } else {
-      val g = if (order == 3) trigrams(toks(col(textCol)))
-        else bigrams(toks(col(textCol)))
-      val cols = (1 to order).map(j => col(s"g.w$j").as(s"w$j"))
-      keyed.select(col(idCol), explode(g).as("g"))
-        .select(col(idCol) +: cols: _*)
-        .withColumn("__occ", lit(1L))
+    val rows = PerDoc.map[String](docs, idCol, col(textCol).cast("string"),
+        StructField("__g", StringType), StructField("__occ", LongType, false)) { (_, text) =>
+      val t = Dedup.normTextJvm(text).split(" ")
+      val m = new java.util.HashMap[String, java.lang.Long]()
+      val sb = new java.lang.StringBuilder
+      var i = 0
+      while (i + order - 1 < t.length) {
+        sb.setLength(0)
+        var j = 0
+        while (j < order) {
+          if (j > 0) sb.append(' '); sb.append(t(i + j)); j += 1
+        }
+        val k = sb.toString
+        val prev = m.get(k)
+        m.put(k, if (prev == null) 1L else prev.longValue + 1L)
+        i += 1
+      }
+      m.asScala.iterator.map { case (k, c) => Seq(k, c.longValue) }
     }
-  }
-
-  /** Adjacent-bigram struct array of a token array: zip the array with
-    * itself shifted by one. Docs with fewer than two tokens produce an
-    * empty array (slice length 0) and vanish at the explode.
-    */
-  private def bigrams(t: Column): Column = {
-    val len = greatest(size(t) - 1, lit(0))
-    arrays_zip(
-      slice(t, lit(1), len).as("w1"),
-      slice(t, lit(2), len).as("w2"))
+    val parts = split(col("__g"), " ")
+    rows.select(col(idCol) +: (0 until order).map(j =>
+      parts.getItem(j).as(s"w${j + 1}")) :+ col("__occ"): _*)
   }
 
   /** Train a stupid-backoff bigram model over `textCol`.
@@ -261,17 +221,6 @@ object NgramLm {
       .select(col("w1"), col("w2"), col("c12"),
         expr(s"(${Scale}L * c12) div __c1").as("bi_score"))
     (bi, uni)
-  }
-
-  /** Adjacent-trigram struct array: the token array zipped with itself
-    * shifted by one and two. Docs under three tokens vanish.
-    */
-  private def trigrams(t: Column): Column = {
-    val len = greatest(size(t) - 2, lit(0))
-    arrays_zip(
-      slice(t, lit(1), len).as("w1"),
-      slice(t, lit(2), len).as("w2"),
-      slice(t, lit(3), len).as("w3"))
   }
 
   /** Train the order-3 stupid-backoff model: returns (trigram table,

@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{LongType, StructField}
 
 /** Text-analysis operators for training-data pipelines: token counting,
   * quality scoring, language ID, document fingerprinting.
@@ -347,9 +348,9 @@ object TextAnalysis {
     * corpus is corpus-sized; the replace chain is cheaper than the
     * exchange it would add).
     *
-    * Scale shape: per round, ONE doc-keyed exchange (the codegen'd
-    * [[Dedup.explodedShingles]] pair stage) + one map-side-combined
-    * count + a TakeOrdered top-1 — exactly ONE row to the driver per
+    * Scale shape: per round, one narrow pair-count pass emitting
+    * per-partition partials + one vocabulary-sized count exchange + a
+    * TakeOrdered top-1 — exactly ONE row to the driver per
     * round (the same bounded-scalar budget as [[bm25TopK]]'s totals and
     * Components' edge count), so the sequential loop is scale-safe by
     * construction; `nMerges ≤ 8` bounds it. Production tokenizer
@@ -630,9 +631,9 @@ object TextAnalysis {
     * — bit-identical in any engine with 64-bit integer division. Docs
     * with fewer than two tokens have no bigrams and emit no row.
     *
-    * Scale shape: one exploded pass (fixed-width repartition by doc, as
-    * in `Dedup.explodedShingles` — the lead window and the final per-doc
-    * aggregate share that one exchange), a map-side-combined bigram-count
+    * Scale shape: one exploded pass (fixed-width repartition by doc —
+    * the lead window and the final per-doc aggregate share that one
+    * exchange), a map-side-combined bigram-count
     * aggregate (vocab²-bounded, usually far smaller), heads derived FROM
     * the bigram counts (no second corpus pass), and count-table joins the
     * planner can broadcast when the vocabulary is small. NOTHING is
@@ -707,163 +708,87 @@ object TextAnalysis {
     *    even when no other doc shares it — the signal doc-level and
     *    span-level dedup both miss.
     *
-    * Scale shape — ONE corpus exchange for the whole bundle, and it is
-    * deliberately NOT persisted: a cached plan is AQE-wrapped and reports
-    * unknown partitioning, which would force every downstream `groupBy`
-    * to re-shuffle gram TEXT (observed: 7 exchanges). Instead the
-    * doc-keyed `repartition` sits un-cached with statically-known
-    * hash(id) partitioning, so the lead-window gram builder, every
-    * `groupBy(id, gram)` (hash(id) satisfies the (id, gram) clustering —
-    * partitioning-subset rule), the per-doc maxima, and the assembling
-    * joins are all exchange-free, and `ReuseExchange` shares the one
-    * token shuffle's map side across all four branches (the branches
-    * re-run only the partition-local sort). Gram text never crosses the
-    * wire, so no digest step is needed; per-doc collect_lists are bounded
-    * by document length, independent of corpus size.
+    * Scale shape: every signal in the bundle is DOC-LOCAL (within-doc
+    * gram counts, within-doc repeated-5-gram coverage), so the whole
+    * bundle is one [[PerDoc]] pass behind the fixed-width doc exchange:
+    * no windows, no grouped counts, no assembling joins, and gram text
+    * never crosses the wire.
     */
   def repetitionSignals(df: DataFrame, idCol: String, textCol: String): DataFrame = {
-    // every signal in the bundle is DOC-LOCAL (within-doc gram counts,
-    // within-doc repeated-5-gram coverage) — on long ids the whole bundle
-    // folds into one narrow per-doc pass (the signature-kernel discipline,
-    // see Dedup's kernel section and the kernel-parity spec): no windows,
-    // no grouped counts, no assembling joins, just the fixed-width doc
-    // exchange feeding a CPU-bound map
-    if (df.schema(idCol).dataType == org.apache.spark.sql.types.LongType) {
-      val spark = df.sparkSession
-      import spark.implicits._
-      val pk = spark.sparkContext.defaultParallelism
-      val rows = df.filter(col(idCol).isNotNull)
-        .repartition(pk, col(idCol))
-        .select(col(idCol), col(textCol).cast("string"))
-        .as[(Long, String)]
-        .mapPartitions(_.flatMap { case (id, text) =>
-          if (text == null) Iterator.empty
-          else {
-            val toks = graft.operators.Dedup.normTextJvm(text).split(" ", -1)
-            def top(n: Int): (Long, Long) = {
-              if (toks.length < n) (0L, 0L)
-              else {
-                val counts = new java.util.HashMap[String, Long]()
-                val sb = new java.lang.StringBuilder
-                var i = 0
-                while (i <= toks.length - n) {
-                  sb.setLength(0)
-                  var j = 0
-                  while (j < n) { if (j > 0) sb.append(' '); sb.append(toks(i + j)); j += 1 }
-                  val g = sb.toString
-                  counts.put(g, counts.get(g) + 1L) // unboxToLong(null) == 0
-                  i += 1
-                }
-                var mc = 0L; var mchars = 0L
-                val it = counts.entrySet().iterator()
-                while (it.hasNext) {
-                  val e = it.next()
-                  val c = e.getValue
-                  if (c > mc) mc = c
-                  val chars = c * e.getKey.codePointCount(0, e.getKey.length)
-                  if (chars > mchars) mchars = chars
-                }
-                (mc, mchars)
-              }
-            }
-            val (t2c, t2ch) = top(2)
-            val (t3c, t3ch) = top(3)
-            // repeated 5-grams: occurrence total + distinct covered starts
-            var dup5Starts = 0L
-            var dup5Cov = 0L
-            if (toks.length >= 5) {
-              val first = new java.util.HashMap[String, Int]()
-              val reps = new java.util.HashMap[String, java.util.ArrayList[Int]]()
-              val sb = new java.lang.StringBuilder
-              var i = 0
-              while (i <= toks.length - 5) {
-                sb.setLength(0)
-                var j = 0
-                while (j < 5) { if (j > 0) sb.append(' '); sb.append(toks(i + j)); j += 1 }
-                val g = sb.toString
-                val r = reps.get(g)
-                if (r != null) r.add(i)
-                else if (first.containsKey(g)) {
-                  val lst = new java.util.ArrayList[Int]()
-                  lst.add(first.get(g)); lst.add(i)
-                  reps.put(g, lst)
-                } else first.put(g, i)
-                i += 1
-              }
-              if (!reps.isEmpty) {
-                val covered = new java.util.HashSet[Int]()
-                val it = reps.values().iterator()
-                while (it.hasNext) {
-                  val lst = it.next()
-                  dup5Starts += lst.size
-                  var x = 0
-                  while (x < lst.size) {
-                    val s = lst.get(x)
-                    var d = 0
-                    while (d < 5) { covered.add(s + d); d += 1 }
-                    x += 1
-                  }
-                }
-                dup5Cov = covered.size.toLong
-              }
-            }
-            Iterator.single((id, toks.length.toLong, t2c, t2ch, t3c, t3ch,
-              dup5Starts, dup5Cov))
+    val out = Seq("n_tokens", "top2_count", "top2_chars", "top3_count",
+      "top3_chars", "dup5_starts", "dup5_cov")
+      .map(StructField(_, LongType, nullable = false))
+    PerDoc.texts(df, idCol, textCol, out: _*) { (_, text) =>
+      val toks = Dedup.normTextJvm(text).split(" ", -1)
+      def top(n: Int): (Long, Long) = {
+        if (toks.length < n) (0L, 0L)
+        else {
+          val counts = new java.util.HashMap[String, Long]()
+          val sb = new java.lang.StringBuilder
+          var i = 0
+          while (i <= toks.length - n) {
+            sb.setLength(0)
+            var j = 0
+            while (j < n) { if (j > 0) sb.append(' '); sb.append(toks(i + j)); j += 1 }
+            val g = sb.toString
+            counts.put(g, counts.get(g) + 1L) // unboxToLong(null) == 0
+            i += 1
           }
-        })
-      return rows.toDF(idCol, "n_tokens", "top2_count", "top2_chars",
-        "top3_count", "top3_chars", "dup5_starts", "dup5_cov")
+          var mc = 0L; var mchars = 0L
+          val it = counts.entrySet().iterator()
+          while (it.hasNext) {
+            val e = it.next()
+            val c = e.getValue
+            if (c > mc) mc = c
+            val chars = c * e.getKey.codePointCount(0, e.getKey.length)
+            if (chars > mchars) mchars = chars
+          }
+          (mc, mchars)
+        }
+      }
+      val (t2c, t2ch) = top(2)
+      val (t3c, t3ch) = top(3)
+      // repeated 5-grams: occurrence total + distinct covered starts
+      var dup5Starts = 0L
+      var dup5Cov = 0L
+      if (toks.length >= 5) {
+        val first = new java.util.HashMap[String, Int]()
+        val reps = new java.util.HashMap[String, java.util.ArrayList[Int]]()
+        val sb = new java.lang.StringBuilder
+        var i = 0
+        while (i <= toks.length - 5) {
+          sb.setLength(0)
+          var j = 0
+          while (j < 5) { if (j > 0) sb.append(' '); sb.append(toks(i + j)); j += 1 }
+          val g = sb.toString
+          val r = reps.get(g)
+          if (r != null) r.add(i)
+          else if (first.containsKey(g)) {
+            val lst = new java.util.ArrayList[Int]()
+            lst.add(first.get(g)); lst.add(i)
+            reps.put(g, lst)
+          } else first.put(g, i)
+          i += 1
+        }
+        if (!reps.isEmpty) {
+          val covered = new java.util.HashSet[Int]()
+          val it = reps.values().iterator()
+          while (it.hasNext) {
+            val lst = it.next()
+            dup5Starts += lst.size
+            var x = 0
+            while (x < lst.size) {
+              val s = lst.get(x)
+              var d = 0
+              while (d < 5) { covered.add(s + d); d += 1 }
+              x += 1
+            }
+          }
+          dup5Cov = covered.size.toLong
+        }
+      }
+      Iterator.single(Seq(toks.length.toLong, t2c, t2ch, t3c, t3ch,
+        dup5Starts, dup5Cov))
     }
-    val p = df.sparkSession.sparkContext.defaultParallelism
-    // explicit isnotnull(id) mirrors what the assembling left-joins infer
-    // for their RIGHT sides only: without it the n_tokens branch (the
-    // preserved side, no inferred filter) canonicalizes differently and
-    // executes its own text shuffle instead of reusing the others' stage
-    val posTok = df
-      .select(col(idCol), split(Dedup.normText(col(textCol)), " ").as("__ts"))
-      .filter(col(idCol).isNotNull)
-      .repartition(p, col(idCol))
-      .select(col(idCol), posexplode(col("__ts")).as(Seq("__pos", "__t")))
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col(idCol)).orderBy(col("__pos"))
-    val l = (1 to 4).map(j => lead(col("__t"), j).over(w))
-    // concat_ws SKIPS nulls (a 1-gram is not a truncated 5-gram), so each
-    // gram column is null-guarded on its last lead
-    val grams = posTok
-      .withColumn("__g2", when(l(0).isNotNull, concat_ws(" ", col("__t"), l(0))))
-      .withColumn("__g3", when(l(1).isNotNull, concat_ws(" ", col("__t"), l(0), l(1))))
-      .withColumn("__g5", when(l(3).isNotNull,
-        concat_ws(" ", (col("__t") +: l): _*)))
-      .select(col(idCol), col("__pos"), col("__g2"), col("__g3"), col("__g5"))
-    def topN(gc: String, out: String): DataFrame =
-      grams.filter(col(gc).isNotNull)
-        .groupBy(col(idCol), col(gc)).agg(count(lit(1)).as("__c"))
-        .groupBy(col(idCol)).agg(
-          max(col("__c")).as(s"${out}_count"),
-          max(col("__c") * length(col(gc)).cast("long")).as(s"${out}_chars"))
-    val dup5 = grams.filter(col("__g5").isNotNull)
-      .groupBy(col(idCol), col("__g5"))
-      .agg(count(lit(1)).as("__c"), collect_list(col("__pos")).as("__ps"))
-      .filter(col("__c") > 1)
-      .groupBy(col(idCol))
-      .agg(sum(col("__c")).as("dup5_starts"),
-        flatten(collect_list(col("__ps"))).as("__starts"))
-      .select(col(idCol), col("dup5_starts"),
-        size(array_distinct(flatten(transform(col("__starts"),
-          s => sequence(s, s + lit(4)))))).cast("long").as("dup5_cov"))
-    // n_tokens off the same reused exchange (split always yields ≥ 1
-    // token, so every doc has a __pos 0 row and max(__pos)+1 is total)
-    posTok.groupBy(col(idCol))
-      .agg((max(col("__pos")) + 1).cast("long").as("n_tokens"))
-      .join(topN("__g2", "top2"), Seq(idCol), "left")
-      .join(topN("__g3", "top3"), Seq(idCol), "left")
-      .join(dup5, Seq(idCol), "left")
-      .select(col(idCol), col("n_tokens"),
-        coalesce(col("top2_count"), lit(0L)).as("top2_count"),
-        coalesce(col("top2_chars"), lit(0L)).as("top2_chars"),
-        coalesce(col("top3_count"), lit(0L)).as("top3_count"),
-        coalesce(col("top3_chars"), lit(0L)).as("top3_chars"),
-        coalesce(col("dup5_starts"), lit(0L)).as("dup5_starts"),
-        coalesce(col("dup5_cov"), lit(0L)).as("dup5_cov"))
   }
 }

@@ -7,8 +7,8 @@ import org.apache.spark.sql.functions._
 import graft.operators.Similarity
 
 /** Recall/latency/footprint table for the ANN tier (r11) — the
-  * which-method-when evidence the near-dup tier already has
-  * (NearDupProbe): every ANN method searches the SAME corpus with the
+  * which-method-when evidence the near-dup tier already has (SURVEY.md,
+  * round-10 near-dup method-choice table): every ANN method searches the SAME corpus with the
   * SAME queries, scored as recall@k against the exact ground truth of
   * ITS OWN metric — LSH/IVF rank by cosine, the PQ tiers by L2 ADC, so
   * each is compared to exact cosine / exact L2 respectively (mixing

@@ -198,7 +198,8 @@ class DedupSpec extends SparkTestBase {
     val s = spark
     import s.implicits._
     val short = Seq((0L, "tiny doc")).toDF("doc_id", "text")
-    val sh = Dedup.explodedShingles(short, "doc_id", "text", 3).collect()
+    assert(Dedup.shinglesJvm(Dedup.normTextJvm("tiny doc"), 3).toSeq == Seq("tiny doc"))
+    val sh = ExplodedOracle.explodedShingles(short, "doc_id", "text", 3).collect()
     assert(sh.map(_.getString(1)).toSeq == Seq("tiny doc"))
   }
 
@@ -206,9 +207,10 @@ class DedupSpec extends SparkTestBase {
     val s = spark
     import s.implicits._
     val df = Seq((0L, "w1 w2 w3 w4 w5")).toDF("doc_id", "text")
-    val viaWindow = Dedup.explodedShingles(df, "doc_id", "text", 3)
+    val viaWindow = ExplodedOracle.explodedShingles(df, "doc_id", "text", 3)
       .collect().map(_.getString(1)).toSet
     assert(viaWindow == Set("w1 w2 w3", "w2 w3 w4", "w3 w4 w5"))
+    assert(Dedup.shinglesJvm("w1 w2 w3 w4 w5", 3).toSet == viaWindow)
   }
 
   test("dropRepeatedParagraphs strips corpus-repeated paragraphs, keeps order") {
@@ -271,11 +273,8 @@ class DedupSpec extends SparkTestBase {
       2L -> s"red green blue $run yellow purple orange pink",
       3L -> "completely different words about nothing shared at all here now",
       4L -> "tiny doc").toDF("doc_id", "text") // < w+k-1 tokens → no row
-    val rows = Dedup.winnowFingerprintRows(corpus, "doc_id", "text",
-      shingleSize = 4, window = 5)
-    val shared = rows.as("a").join(rows.as("b"),
-      col("a.fp") === col("b.fp") && col("a.doc_id") < col("b.doc_id"))
-      .select(col("a.doc_id"), col("b.doc_id")).distinct()
+    val shared = Dedup.winnowOverlapPairs(corpus, "doc_id", "text",
+        shingleSize = 4, window = 5, minShared = 1L)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(shared.contains((1L, 2L)),
       "the winnowing guarantee: docs sharing the 8-token run must share a fingerprint")

@@ -178,4 +178,16 @@ class LinkGraphSpec extends SparkTestBase {
           (85L * (111111111111L + 222222222222L)) / 100L)
     }
   }
+
+  test("a rank scale past Long range fails loudly on both paths") {
+    // (dampDen - dampNum) * totalScale = 15 * 1e18 does not fit a Long;
+    // unchecked, it wrapped and the teleport term went negative silently
+    val ring = (0L until 100L).map(i => (i, (i + 1) % 100L))
+    for (t <- thresholds) {
+      intercept[ArithmeticException] {
+        LinkGraph.pagerank(edges(ring: _*), nodes(0L until 100L: _*), "src", "dst",
+          "id", 2, 1000000000000000000L, 85L, 100L, None, t).collect()
+      }
+    }
+  }
 }

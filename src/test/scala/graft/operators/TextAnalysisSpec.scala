@@ -264,8 +264,8 @@ class TextAnalysisSpec extends SparkTestBase {
     val s = spark
     import s.implicits._
     // messy corpus: nulls, empties, 1-token docs (no pair), within-doc
-    // repeats, whitespace runs — the cases where the old explodedShingles
-    // counting had edge semantics (null/1-token docs contribute nothing)
+    // repeats, whitespace runs — the cases where the exploded shingle
+    // counting has edge semantics (null/1-token docs contribute nothing)
     val df = Seq(
       (1L, "x y x y x"), (2L, "x x y y"), (3L, null.asInstanceOf[String]),
       (4L, ""), (5L, "solo"), (6L, "  x   y  "), (7L, "y x y x"))
@@ -279,7 +279,7 @@ class TextAnalysisSpec extends SparkTestBase {
     var merges = Seq.empty[(String, String)]
     val ref = (0 until 3).map { k =>
       val enc = TextAnalysis.bpeEncode(df, "doc_id", "text", merges)
-      val top = Dedup.explodedShingles(enc.select(col("doc_id"),
+      val top = ExplodedOracle.explodedShingles(enc.select(col("doc_id"),
           col("bpe_text")), "doc_id", "bpe_text", 2)
         .filter(col("__sh").contains(" "))
         .groupBy(col("__sh")).agg(count(lit(1)).as("cnt"))
