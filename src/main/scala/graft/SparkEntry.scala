@@ -5004,8 +5004,13 @@ object SparkEntry {
     // blocking design — the expensive thing is GENERATING it, and its
     // plan is the union of two-to-four blocking-join trees): every
     // downstream action (scoring, calibration, the component loop's
-    // edge count) would otherwise re-optimize those trees
-    val cand = cand0.localCheckpoint(true)
+    // edge count) would otherwise re-optimize those trees. A ledger the
+    // driver already built is a LocalRelation leaf: nothing to truncate,
+    // and a checkpoint would only cost a job.
+    val cand = cand0.queryExecution.analyzed match {
+      case _: org.apache.spark.sql.catalyst.plans.logical.LocalRelation => cand0
+      case _ => cand0.localCheckpoint(true)
+    }
     val codes = Tables.embeddings(s, dir).filter(col("vec_id") < 40)
       .select(col("vec_id").cast("long").as("ent"),
         Similarity.quantize(col("embedding"),

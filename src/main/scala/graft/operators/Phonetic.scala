@@ -86,38 +86,57 @@ object Phonetic {
     */
   private def segmentedCandidates(ls: DataFrame, rs: DataFrame,
                                   d: Int): DataFrame = {
-    val k = d + 1
-    // seg i of a length-L string: len = L div k + (i < L mod k),
-    // start (0-based) = i * (L div k) + min(i, L mod k)
-    def segLen(l: String, i: String) = s"($l div $k) + if($i < $l % $k, 1, 0)"
-    def segStart(l: String, i: String) = s"$i * ($l div $k) + least($i, $l % $k)"
-    val probeKeys = expr(
-      s"""flatten(transform(
-         |  if(length($LS) + $d < $k, array(),
-         |     sequence(greatest($k, length($LS) - $d), length($LS) + $d)),
-         |  lb -> flatten(transform(sequence(0, $d), i ->
-         |    transform(
-         |      if(least(length($LS) - (${segLen("lb", "i")}),
-         |               (${segStart("lb", "i")}) + $d)
-         |           < greatest(0, (${segStart("lb", "i")}) - $d), array(),
-         |         sequence(greatest(0, (${segStart("lb", "i")}) - $d),
-         |                  least(length($LS) - (${segLen("lb", "i")}),
-         |                        (${segStart("lb", "i")}) + $d))),
-         |      sa -> named_struct('lb', lb, 'i', i,
-         |        'sub', substring($LS, sa + 1, ${segLen("lb", "i")})))))))""".stripMargin)
-    val indexKeys = expr(
-      s"""transform(sequence(0, $d), i -> named_struct(
-         |  'lb', length($RS), 'i', i,
-         |  'sub', substring($RS, (${segStart(s"length($RS)", "i")}) + 1,
-         |                   ${segLen(s"length($RS)", "i")})))""".stripMargin)
-    val probe = ls.select(col(LS), col(PK), explode(probeKeys).as("pk"))
+    val probe = ls.select(col(LS), col(PK), explode(probeKeys(LS, d)).as("pk"))
       .select(col(LS), col(PK), col("pk.lb"), col("pk.i"), col("pk.sub"))
       .distinct()
-    val index = rs.filter(length(col(RS)) >= k)
-      .select(col(RS), col(PK), explode(indexKeys).as("pk"))
+    val index = rs.filter(length(col(RS)) >= d + 1)
+      .select(col(RS), col(PK), explode(indexKeys(RS, d)).as("pk"))
       .select(col(RS), col(PK), col("pk.lb"), col("pk.i"), col("pk.sub"))
     probe.join(index, Seq(PK, "lb", "i", "sub"))
       .select(col(LS), col(RS)).distinct()
+  }
+
+  // seg i of a length-L string split into k parts: len = L div k +
+  // (i < L mod k), start (0-based) = i * (L div k) + min(i, L mod k)
+  private def segLen(l: String, i: String, k: Int) = s"($l div $k) + if($i < $l % $k, 1, 0)"
+  private def segStart(l: String, i: String, k: Int) = s"$i * ($l div $k) + least($i, $l % $k)"
+
+  /** The probe side of [[segmentedCandidates]]: an array of
+    * (`lb`, `i`, `sub`) structs for string column `c` — every partner
+    * length, segment index and displaced start within `d`. Empty for a
+    * string too short to match any segmented partner.
+    */
+  private[operators] def probeKeys(c: String, d: Int): Column = {
+    val k = d + 1
+    val s = quoted(c)
+    expr(
+      s"""flatten(transform(
+         |  if(length($s) + $d < $k, array(),
+         |     sequence(greatest($k, length($s) - $d), length($s) + $d)),
+         |  lb -> flatten(transform(sequence(0, $d), i ->
+         |    transform(
+         |      if(least(length($s) - (${segLen("lb", "i", k)}),
+         |               (${segStart("lb", "i", k)}) + $d)
+         |           < greatest(0, (${segStart("lb", "i", k)}) - $d), array(),
+         |         sequence(greatest(0, (${segStart("lb", "i", k)}) - $d),
+         |                  least(length($s) - (${segLen("lb", "i", k)}),
+         |                        (${segStart("lb", "i", k)}) + $d))),
+         |      sa -> named_struct('lb', lb, 'i', i,
+         |        'sub', substring($s, sa + 1, ${segLen("lb", "i", k)})))))))""".stripMargin)
+  }
+
+  /** The index side of [[segmentedCandidates]]: the `d + 1` own
+    * segments of string column `c` as (`lb`, `i`, `sub`) structs. Only
+    * strings of length at least `d + 1` are indexed this way.
+    */
+  private[operators] def indexKeys(c: String, d: Int): Column = {
+    val k = d + 1
+    val s = quoted(c)
+    expr(
+      s"""transform(sequence(0, $d), i -> named_struct(
+         |  'lb', length($s), 'i', i,
+         |  'sub', substring($s, (${segStart(s"length($s)", "i", k)}) + 1,
+         |                   ${segLen(s"length($s)", "i", k)})))""".stripMargin)
   }
 
   /** Sound-alike join: one row per (left row, right row) pair whose

@@ -1,5 +1,7 @@
 package graft.sources
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions.{col, lit, timestamp_diff, unix_micros}
 import org.apache.spark.sql.types.{LongType, TimestampNTZType, TimestampType}
@@ -68,42 +70,54 @@ object Tables {
       case _ => df
     }
 
-  /** Raw reader schema per (path, mtime, length) — inferred ONCE per
-    * process and file version (r20). Parquet schema inference runs a
+  /** Raw reader schema per path and file version — inferred ONCE per
+    * process and version (r20). Parquet schema inference runs a
     * footer-reading Spark JOB at every `read.parquet` call; with ~3
     * table reads per query that job plus its scheduling gap was a
     * measured ~0.1 s of fixed cost per query execution (JobProfile:
     * three `parquet at Tables.scala` jobs leading every profile).
-    * Passing the cached schema skips inference entirely; the stat-keyed
-    * key invalidates if a fixture is ever rewritten in-process. The
-    * cache holds StructTypes only — never data, never results — so
-    * every execution still computes from the parquet bytes.
+    * Passing the cached schema skips inference entirely. A file's
+    * version is its (mtime, length); a directory's is the sorted
+    * (relative name, mtime, length) of every file under it, since the
+    * directory's own length is a filesystem constant and its mtime
+    * moves only when entries come and go, at the filesystem's mtime
+    * granularity. The cache holds StructTypes only — never data, never
+    * results — so every execution still computes from the parquet
+    * bytes.
     */
   private val schemaCache =
-    new java.util.concurrent.ConcurrentHashMap[(String, Long, Long),
+    new java.util.concurrent.ConcurrentHashMap[(String, Seq[(String, Long, Long)]),
       org.apache.spark.sql.types.StructType]()
 
-  /** `spark.read.parquet(path)` with the same stat-keyed schema cache
-    * as [[table]] (no event-time normalization): for process-written,
-    * write-once materialized inputs whose schema can't change under us.
-    * A rewritten path changes the stat key and re-infers.
-    */
-  def readCached(spark: SparkSession, path: String): DataFrame = {
-    val f = new java.io.File(path)
-    val schema = schemaCache.computeIfAbsent((path, f.lastModified, f.length),
-      _ => spark.read.parquet(path).schema)
-    spark.read.schema(schema).parquet(path)
+  private def cachedSchema(spark: SparkSession, path: String)
+      : org.apache.spark.sql.types.StructType = {
+    val root = java.nio.file.Paths.get(path)
+    def stat(p: java.nio.file.Path) =
+      (root.relativize(p).toString, p.toFile.lastModified, p.toFile.length)
+    val version =
+      if (java.nio.file.Files.isDirectory(root)) {
+        val files = java.nio.file.Files.walk(root)
+        try files.iterator.asScala.filter(java.nio.file.Files.isRegularFile(_))
+          .map(stat).toSeq.sorted
+        finally files.close()
+      } else Seq(stat(root))
+    schemaCache.computeIfAbsent((path, version), _ => spark.read.parquet(path).schema)
   }
+
+  /** `spark.read.parquet(path)` with the same version-keyed schema
+    * cache as [[table]] (no event-time normalization): for
+    * process-written materialized inputs. A rewritten path changes the
+    * version key and re-infers.
+    */
+  def readCached(spark: SparkSession, path: String): DataFrame =
+    spark.read.schema(cachedSchema(spark, path)).parquet(path)
 
   def table(spark: SparkSession, sfDir: String, name: String): DataFrame = {
     // the only session conf this layer touches: read-side decode of
     // legacy TIMESTAMP(NANOS) files (dynamic, harmless for other files)
     spark.conf.set(NanosConf, "true")
     val path = s"$sfDir/$name.parquet"
-    val f = new java.io.File(path)
-    val schema = schemaCache.computeIfAbsent((path, f.lastModified, f.length),
-      _ => spark.read.parquet(path).schema)
-    normalizeEventTime(spark.read.schema(schema).parquet(path))
+    normalizeEventTime(spark.read.schema(cachedSchema(spark, path)).parquet(path))
   }
 
   /** All star-schema table names present in an sf directory. */

@@ -32,6 +32,15 @@ object Bridge {
       : org.apache.spark.sql.DataFrame =
     org.apache.spark.sql.classic.Dataset.ofRows(
       spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession], plan)
+  /** `df.collect()` as Catalyst rows, so strings keep their UTF-8
+    * bytes as they are; one SQL execution, as `collect()` runs it.
+    */
+  def collectInternal(df: org.apache.spark.sql.DataFrame)
+      : Array[org.apache.spark.sql.catalyst.InternalRow] = {
+    val qe = df.queryExecution
+    org.apache.spark.sql.execution.SQLExecution.withNewExecutionId(qe)(
+      qe.executedPlan.executeCollect())
+  }
   def registerFunction(spark: SparkSession, name: String,
                        builder: Seq[Expression] => Expression): Unit =
     spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]

@@ -7,6 +7,11 @@ import graft.SparkTestBase
 class EntityResolutionSpec extends SparkTestBase {
   import spark.implicits._
 
+  /** The candidate tests run on the driver path and, at bound 0, on
+    * the distributed passes.
+    */
+  private val bounds = Seq(EntityResolution.LocalThreshold, 0L)
+
   test("candidatePairs: union of both passes with merged flags and exact dist") {
     // smith/smyth: 1 substitution -> fuzzy AND phonetic (same key S530)
     // phillips/philips: doubled consonant, d=1 -> both passes
@@ -14,22 +19,26 @@ class EntityResolutionSpec extends SparkTestBase {
     // smith/zzzz: unrelated -> no pair
     val names = Seq("smith", "smyth", "smithey", "phillips", "philips", "zzzz")
       .toDF("name")
-    val got = EntityResolution.candidatePairs(names, "name",
-      maxEdit = 1, maxPhoneticDist = 2)
-      .select("str_a", "str_b", "dist", "via_fuzzy", "via_phonetic")
-      .as[(String, String, Int, Int, Int)].collect().toSet
-    assert(got.contains(("smith", "smyth", 1, 1, 1)))
-    assert(got.contains(("philips", "phillips", 1, 1, 1)))
-    assert(got.contains(("smith", "smithey", 2, 0, 1)))
-    assert(!got.exists(p => p._1 == "zzzz" || p._2 == "zzzz"))
-    // one row per pair even when both passes surface it
-    assert(got.count(p => p._1 == "smith" && p._2 == "smyth") == 1)
+    for (bound <- bounds) {
+      val got = EntityResolution.candidatePairs(names, "name",
+        maxEdit = 1, maxPhoneticDist = 2, localThreshold = bound)
+        .select("str_a", "str_b", "dist", "via_fuzzy", "via_phonetic")
+        .as[(String, String, Int, Int, Int)].collect().toSet
+      assert(got.contains(("smith", "smyth", 1, 1, 1)))
+      assert(got.contains(("philips", "phillips", 1, 1, 1)))
+      assert(got.contains(("smith", "smithey", 2, 0, 1)))
+      assert(!got.exists(p => p._1 == "zzzz" || p._2 == "zzzz"))
+      // one row per pair even when both passes surface it
+      assert(got.count(p => p._1 == "smith" && p._2 == "smyth") == 1)
+    }
   }
 
   test("candidatePairs: duplicate input rows collapse to distinct strings") {
     val names = Seq("abc", "abc", "abd", "abd", "abd").toDF("name")
-    val got = EntityResolution.candidatePairs(names, "name", 1, 2)
-    assert(got.count() == 1) // one (abc, abd) pair, not 2x3
+    for (bound <- bounds) {
+      val got = EntityResolution.candidatePairs(names, "name", 1, 2, bound)
+      assert(got.count() == 1) // one (abc, abd) pair, not 2x3
+    }
   }
 
   test("evidenceScore: distance bands dominate, phonetic breaks ties, cosine orders within") {
@@ -90,24 +99,26 @@ class EntityResolutionSpec extends SparkTestBase {
     def pairSet(df: org.apache.spark.sql.DataFrame) = df
       .select("str_a", "str_b", "dist", "via_fuzzy", "via_phonetic")
       .as[(String, String, Int, Int, Int)].collect().toSet
-    val full = pairSet(EntityResolution.candidatePairs(
-      universe.toDF("name"), "name", 1, 2))
-    assert(full.nonEmpty)
-    for (seed <- Seq(5, 17, 41)) {
-      val rnd = new scala.util.Random(seed)
-      val (standing, fresh) = universe.partition(_ => rnd.nextBoolean())
-      val sDf = standing.toDF("name")
-      val base = pairSet(EntityResolution.candidatePairs(sDf, "name", 1, 2))
-      val inc = pairSet(EntityResolution.candidatePairsIncrement(
-        sDf, fresh.toDF("name"), "name", 1, 2))
-      assert(base.intersect(inc).isEmpty, s"overlap at seed $seed")
-      assert(base.union(inc) == full, s"law broke at seed $seed: " +
-        s"missing ${full.diff(base.union(inc))}, extra ${base.union(inc).diff(full)}")
+    for (bound <- bounds) {
+      val full = pairSet(EntityResolution.candidatePairs(
+        universe.toDF("name"), "name", 1, 2, bound))
+      assert(full.nonEmpty)
+      for (seed <- Seq(5, 17, 41)) {
+        val rnd = new scala.util.Random(seed)
+        val (standing, fresh) = universe.partition(_ => rnd.nextBoolean())
+        val sDf = standing.toDF("name")
+        val base = pairSet(EntityResolution.candidatePairs(sDf, "name", 1, 2, bound))
+        val inc = pairSet(EntityResolution.candidatePairsIncrement(
+          sDf, fresh.toDF("name"), "name", 1, 2, bound))
+        assert(base.intersect(inc).isEmpty, s"overlap at seed $seed, bound $bound")
+        assert(base.union(inc) == full, s"law broke at seed $seed, bound $bound: " +
+          s"missing ${full.diff(base.union(inc))}, extra ${base.union(inc).diff(full)}")
+      }
+      // fresh strings already standing contribute nothing new
+      val inc2 = EntityResolution.candidatePairsIncrement(
+        universe.toDF("name"), Seq("smith", "smyth").toDF("name"), "name", 1, 2, bound)
+      assert(inc2.count() == 0)
     }
-    // fresh strings already standing contribute nothing new
-    val inc2 = EntityResolution.candidatePairsIncrement(
-      universe.toDF("name"), Seq("smith", "smyth").toDF("name"), "name", 1, 2)
-    assert(inc2.count() == 0)
   }
 
   test("mergeComponents absorb law: components(E1 UNION E2) == " +
