@@ -1710,8 +1710,8 @@ object SparkEntry {
       // retrieve-then-rerank: ADC shortlist of 20 from codes alone, then
       // exact L2 over only the shortlisted vectors (fetched map-side by
       // broadcasting the bounded shortlist into the corpus scan) — the
-      // production PQ shape; AnnRecallProbe measures 0.92 recall@10 at
-      // 8 B/vec where plain ADC caps at 0.44
+      // production PQ shape; measured 0.92 recall@10 at 8 B/vec where
+      // plain ADC caps at 0.44 (SURVEY.md §2.4, r11 ANN table)
       val e = Tables.embeddings(s, dir)
       val q = e.filter(col("vec_id") < 8)
       Similarity.pqTopKReranked(e, q, "vec_id", "embedding", 5, 20,
@@ -2986,8 +2986,8 @@ object SparkEntry {
     // in binary/UTF-8 order on both engines; the oracle is the plain
     // three-predicate WHERE, so any stats, encoding, comparison-order,
     // or residual-filter defect hash-fails. The 2-D files-touched win
-    // over 1-D clustering is measured in tools/ManifestPruneProbe
-    // (ledger) and pinned in SnapshotsSpec.
+    // over 1-D clustering is measured in SURVEY.md Appendix A (r14)
+    // and pinned in SnapshotsSpec.
     "q_manifest_prune_multi" -> ((s, dir) => {
       val root = materializedDir("manifestprunemulti", dir) { path =>
         val e = Tables.events(s, dir).select(col("event_id"), col("user_id"),

@@ -18,8 +18,8 @@ import org.apache.spark.storage.StorageLevel
   * same as GraphX Pregel): two shuffles per round, state persisted and
   * lineage cut (localCheckpoint) so plans don't snowball.
   *
-  * SMALL-GRAPH FAST PATH: below `localThreshold` measured edges (default
-  * 1M ≈ 32 MB on the driver, the same bounded-driver-action budget as
+  * SMALL-GRAPH FAST PATH: up to [[LocalThreshold]] measured edges
+  * (1M ≈ 32 MB on the driver, the same bounded-driver-action budget as
   * the IVF training sample), the edge list is collected and solved with
   * a local union-find — identical output, none of the per-round job
   * latency that dominates iterative loops on small data. The distributed
@@ -28,13 +28,25 @@ import org.apache.spark.storage.StorageLevel
   */
 object Components {
 
+  /** Raw edge rows up to which [[connectedComponents]] solves on the
+    * driver (see the object doc).
+    */
+  private[operators] val LocalThreshold = 1000000L
+
   /** (id, component) for every node appearing in `edges`; component = the
     * smallest node id reachable from `id`. Ids are normalized to LONG in
     * the output (both paths), so callers can join on them uniformly.
     */
   def connectedComponents(edges: DataFrame, srcCol: String, dstCol: String,
-                          maxIter: Int = 20,
-                          localThreshold: Long = 1000000L): DataFrame = {
+                          maxIter: Int = 20): DataFrame =
+    connectedComponents(edges, srcCol, dstCol, maxIter, LocalThreshold)
+
+  /** [[connectedComponents]] with the small-graph bound as a parameter;
+    * specs pass 0 to force the distributed loop.
+    */
+  private[operators] def connectedComponents(edges: DataFrame, srcCol: String,
+                                             dstCol: String, maxIter: Int,
+                                             localThreshold: Long): DataFrame = {
     // symmetrize once; hash-partition by the join key BEFORE caching so
     // the per-round hook join never reshuffles the (big) edge side — only
     // the (small) label table moves each round. Partition count adapts to

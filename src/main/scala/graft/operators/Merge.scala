@@ -27,8 +27,8 @@ import org.apache.spark.sql.functions._
   *    optimizer rescues it: Spark 4's `WindowGroupLimit` partial
   *    pushdown keeps top-1 per key map-side, and measured under 2M
   *    changes on ONE key it then matches `max_by` within noise
-  *    ([[graft.tools.MergeSkewProbe]], rescue verified in the executed
-  *    plan). Without that engine-specific rewrite — other engines, or a
+  *    (SURVEY.md §2.4, the r11 merge hot-key probe; rescue verified in
+  *    the executed plan). Without that engine-specific rewrite — other engines, or a
   *    rank predicate the rewrite declines — the hot key's entire change
   *    history sorts in one window task.
   *

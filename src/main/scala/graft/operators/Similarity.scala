@@ -490,9 +490,10 @@ object Similarity {
     * pairs. That mode misses dup pairs where neither side resembles the
     * representative (recall loss, never false flags) — the standard
     * SemDeDup degradation for a cell the quantizer failed to split, and
-    * the measured 100× failure mode `tools/SemDedupProbe` demonstrates
-    * (a data-independent quantizer funneling a whole blob into one
-    * cell). Centroids come from [[trainIvfCentroids]] in production;
+    * the measured 100× failure mode (a data-independent quantizer
+    * funneling a whole blob into one cell; SURVEY.md §2.4, the round-6
+    * SemDeDup quantizer measurement). Centroids come from
+    * [[trainIvfCentroids]] in production;
     * [[fixedCentroids]] makes the whole pipeline engine-reproducible.
     */
   def semDedup(df: DataFrame, idCol: String, vecCol: String,
@@ -722,10 +723,10 @@ object Similarity {
     * shortlist of `shortlist` candidates from codes alone, then EXACT
     * squared-L2 re-orders only those candidates and keeps the top `k`.
     * Codes can't order near-ties (8 B of quantized state — measured
-    * recall@10 caps ~0.44 even with byte-wide codebooks,
-    * `tools/AnnRecallProbe`), but they are excellent at not MISSING true
-    * neighbors in a 10×-deeper shortlist: rerank lifts recall to ~0.92
-    * at the same 8 B/vec store.
+    * recall@10 caps ~0.44 even with byte-wide codebooks, SURVEY.md
+    * §2.4, r11 ANN method-choice table), but they are excellent at not
+    * MISSING true neighbors in a 10×-deeper shortlist: rerank lifts
+    * recall to ~0.92 at the same 8 B/vec store.
     *
     * Scale shape: the shortlist is queries × `shortlist` id rows —
     * bounded by the query batch, broadcast TO the corpus, so the full

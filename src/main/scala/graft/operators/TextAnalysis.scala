@@ -357,9 +357,10 @@ object TextAnalysis {
     * training samples the corpus anyway — feed a deterministic sample
     * for the 100 TB case.
     *
-    * Measured per-round cost (tools/BpeCurveProbe, sf0.1 sample, warm
-    * min of 3, local[32]): nMerges 2/4/6/8 → 1.25/2.55/3.91/5.18 s —
-    * marginal cost per round FLAT at 0.63-0.68 s. The deepening
+    * Measured per-round cost (r9, SURVEY.md §2.4 "BPE trainer loop"
+    * row; sf0.1 sample, warm min of 3, local[32]): nMerges 2/4/6/8 →
+    * 1.25/2.55/3.91/5.18 s — marginal cost per round FLAT at
+    * 0.63-0.68 s. The deepening
     * replace chain is theoretically ~quadratic in nMerges, but at these
     * depths the per-round exchange + count dominates and the chain term
     * is noise; raising the `nMerges ≤ 8` bound to tokenizer-realistic
@@ -515,10 +516,10 @@ object TextAnalysis {
     * correctness) and new adjacencies created by a merge are added as
     * they form. Scale shape: ONE narrow `mapPartitions` over (id, text)
     * — ZERO exchanges, embarrassingly parallel like the chain. Measured
-    * ([[graft.tools.BpeEncodeProbe]], sf0.1 warm): there is NO crossover
-    * — deep wins even at depth 8 (0.20 s vs the chain's 0.41 s; the
-    * chain's three whole-string materializations per merge cost more
-    * than leaving codegen saves) and depth 512 costs what the chain
+    * (SURVEY.md §2.4, r11 BPE encoder flavor table; sf0.1 warm): there
+    * is NO crossover — deep wins even at depth 8 (0.20 s vs the
+    * chain's 0.41 s; the chain's three whole-string materializations
+    * per merge cost more than leaving codegen saves) and depth 512 costs what the chain
     * pays for 8 (0.40 s). The chain stays as the shallow-depth flavor
     * because its algebra IS the SQL oracle's replace chain —
     * engine-portability, not speed.

@@ -242,9 +242,7 @@ class SnapshotStreamSource extends StreamSourceProvider with StreamSinkProvider
             s"$table already has committed versions (SaveMode.ErrorIfExists)")
         try Snapshots.commitFirstVersion(spark, table, data, statsCols, bucketCols)
         catch {
-          case e: IllegalArgumentException
-            if e.getMessage != null &&
-              e.getMessage.contains("already has committed versions") =>
+          case _: Snapshots.ConcurrentCommitException =>
             throw new IllegalArgumentException(
               s"$table already has committed versions (SaveMode.ErrorIfExists)")
         }
@@ -255,9 +253,7 @@ class SnapshotStreamSource extends StreamSourceProvider with StreamSinkProvider
             // the table exists (a racer's publish won the slot since the
             // probe): Ignore's contract is exactly this no-op — the
             // racer's v1 is never overwritten
-            case e: IllegalArgumentException
-              if e.getMessage != null &&
-                e.getMessage.contains("already has committed versions") => ()
+            case _: Snapshots.ConcurrentCommitException => ()
           }
     }
     // the returned relation is advisory (Spark's SaveIntoDataSourceCommand

@@ -47,7 +47,18 @@ import org.apache.spark.sql.types.{ArrayType, ByteType, DataType, DateType, Inte
   *      commit (its base segment list is re-resolved each attempt). The
   *      create-if-absent slot: `link(2)` on local filesystems, full
   *      tmp-write + atomic `rename` on HDFS-like stores, a conditional
-  *      put on object stores (see [[publish]]).
+  *      put on object stores (see [[createExclusive]]).
+  *
+  * Every version file of every chain — main, branch or clone — is
+  * written by ONE commit path, [[commit]]: it stamps the headers in
+  * their fixed order (`# ts=`, `# fork=`, `# token=`,
+  * `# dataChange=false`, `# schema=`) and owns the slot and its retry
+  * loop. A commit that copies or rewrites the head it planned against
+  * (compaction, metadata fold, partial rewrite, merge, first version,
+  * clone, branch create, fast-forward) goes through [[commitOnHead]],
+  * which refuses any other head with a [[ConcurrentCommitException]];
+  * the rewrites share one body shape, [[rewriteCommit]]: a carry
+  * segment of entries kept by reference plus one staged segment.
   *
   * Commit METADATA cost is O(delta): an append writes ONE segment (its
   * own staged lines) and ONE version file listing segment names — it
@@ -151,7 +162,7 @@ object Snapshots {
   private val TokenHeader = "# token="
   private val SchemaHeader = "# schema="
   private val ForkHeader = "# fork="
-  // wall-clock commit time, stamped by publish() on every version file:
+  // wall-clock commit time, stamped by commit() on every version file:
   // drives AS-OF timestamp resolution and the history metadata table.
   // Advisory like any wall clock (not the serialization order source —
   // version numbers are), but monotone in practice since commits
@@ -227,7 +238,7 @@ object Snapshots {
   // hint pointing there (a committer stalled across a vacuum regressed
   // it) is REJECTED and the reader LISTs. Without this, a regressed
   // hint at a pinned island would probe exists(island+1)=false and
-  // return a WRONG head — and publish() would then fork history into
+  // return a WRONG head — and commit() would then fork history into
   // the freed slot above it.
   private val VacuumFloorFile = "_vacuum.floor"
 
@@ -919,25 +930,20 @@ object Snapshots {
     resolveChainVersion(spark,
       branch.fold(mainChain(table))(branchChain(table, _)), version)
 
-  /** Commit `df` as the table's FIRST version, validated INSIDE the
-    * publish slot: the emptiness check and the commit are one atomic
-    * step, so two racing first writers cannot both land (the loser's
-    * closure sees the winner's head and throws — its staged segment and
-    * data are vacuumable orphans). What the format writer's
+  /** Commit `df` as the table's FIRST version, planned on the empty
+    * head: the emptiness check and the commit are one atomic step, so
+    * two racing first writers cannot both land (the loser sees the
+    * winner's head and throws [[ConcurrentCommitException]] — its staged
+    * segment and data are vacuumable orphans). What the format writer's
     * ErrorIfExists/Ignore modes need; a check-then-act
     * `versions(...).isEmpty` outside the slot is a TOCTOU race.
     */
   private[sources] def commitFirstVersion(spark: SparkSession, table: String,
                                           df: DataFrame,
                                           statsCols: Seq[String] = Nil,
-                                          bucketCols: Map[String, Int] = Map.empty): Int = {
-    val body = stageSegment(spark, table, df, statsCols, bucketCols)
-    publish(spark, mainChain(table), h => {
-      require(h.isEmpty,
-        s"$table already has committed versions (head v${h.get})")
-      schemaLine(relaxed(df.schema)) +: body
-    })
-  }
+                                          bucketCols: Map[String, Int] = Map.empty): Int =
+    commitOnHead(spark, mainChain(table), "first commit", None,
+      Version(stageSegment(spark, table, df, statsCols, bucketCols), Some(df.schema)))
 
   /** The version that was the head at wall-clock `tsMillis` — the
     * resolution [[readAsOf]] reads; public for the format reader's
@@ -1144,13 +1150,13 @@ object Snapshots {
     // they ride in every manifest line (`sz=` cell) so reads never stat
     val listed = fs(spark, table).listStatus(new Path(table, rel))
       .filter(s => s.isFile && s.getPath.getName.endsWith(".parquet"))
-      .map(s => (s"$rel/${s.getPath.getName}", s.getLen)).sortBy(_._1).toSeq
-    val rels = listed.map { case (r, len) => s"$r\t$SizeCell$len" }
-    if (statsCols.isEmpty && bucketCols.isEmpty) rels
-    else
-      rels.map { r =>
+      .map(s => (s.getPath.getName, s.getLen)).sortBy(_._1).toSeq
+    listed.map { case (name, len) =>
+      if (statsCols.isEmpty && bucketCols.isEmpty)
+        renderLine(s"$rel/$name", Some(len), None, Nil, Nil, Nil)
+      else {
         // a staged file no write task reported holds zero rows
-        val st = byName.getOrElse(r.split('\t').head.split('/').last,
+        val st = byName.getOrElse(name,
           FileStats("", 0L, statsCols.map(_ => null),
             statsCols.map(_ => null), statsCols.map(_ => 0L), bks.map(_ => None)))
         val cells = statsCols.indices.flatMap { i =>
@@ -1167,23 +1173,28 @@ object Snapshots {
         val bcells = bks.zip(st.bucketIds).flatMap { case ((c, m), ids) =>
           ids.map(c -> BucketStat(m, _)) }
         val nulls = statsCols.zip(st.nonNull).map { case (c, nn) => c -> (st.rows - nn) }
-        renderLine(r, st.rows, cells, bcells, nulls)
+        renderLine(s"$rel/$name", Some(len), Some(st.rows), cells, bcells, nulls)
       }
+    }
   }
 
-  /** A staged file's manifest line: its `path\tsz=` prefix, then the
-    * row count, stats, bucket and NULL-count cells.
+  /** One manifest data line — the inverse of [[parseEntry]]: the path,
+    * the `sz=` and `rc=` cells when known, then the stats, bucket and
+    * NULL-count cells in the order given (a staged line keeps
+    * `statsCols` order, a carried entry sorted order).
     */
-  private[sources] def renderLine(r: String, rows: Long, cells: Seq[(String, ColStat)],
-                                  bcells: Seq[(String, BucketStat)],
+  private[sources] def renderLine(path: String, size: Option[Long], rows: Option[Long],
+                                  stats: Seq[(String, ColStat)],
+                                  buckets: Seq[(String, BucketStat)],
                                   nulls: Seq[(String, Long)]): String =
-    (r +: (s"$RowsCell$rows" +: (cells.map { case (c, st) =>
-      s"${enc(c)}=${st.kind}:${enc(st.lo)}:${enc(st.hi)}"
-    } ++ bcells.map { case (c, b) =>
-      s"$BucketCellPrefix${enc(c)}=${b.mod}:${b.ids.mkString(",")}"
-    } ++ nulls.map { case (c, n) =>
-      s"$NullsCellPrefix${enc(c)}=$n"
-    }))).mkString("\t")
+    (path +: (size.map(SizeCell + _).toSeq ++ rows.map(RowsCell + _) ++
+      stats.map { case (c, st) =>
+        s"${enc(c)}=${st.kind}:${enc(st.lo)}:${enc(st.hi)}"
+      } ++ buckets.map { case (c, b) =>
+        s"$BucketCellPrefix${enc(c)}=${b.mod}:${b.ids.mkString(",")}"
+      } ++ nulls.map { case (c, n) =>
+        s"$NullsCellPrefix${enc(c)}=$n"
+      })).mkString("\t")
 
   /** Stage + wrap as a segment reference: the body contribution of one
     * commit — empty when nothing was staged (token-only commits).
@@ -1236,13 +1247,36 @@ object Snapshots {
     }
   }
 
-  /** Publish `lines` as the next version of chain `c` on top of head
-    * `base`; returns the committed version. `base(headAtRetry)`
-    * recomputes the body from whatever head the winning racer left —
-    * append semantics stay serializable without locks.
+  /** One version file's content besides its commit time: the body and
+    * the headers [[commit]] writes for it. The schema is recorded
+    * nullability-relaxed ([[relaxed]]), as every snapshot schema is.
     */
-  private def publish(spark: SparkSession, c: Chain,
-                      base: Option[Int] => Seq[String]): Int = {
+  private final case class Version(body: Seq[String], schema: Option[StructType],
+                                   token: Option[String] = None,
+                                   maintenance: Boolean = false,
+                                   fork: Option[Int] = None)
+
+  /** A commit planned against one head found another: its body copies
+    * or rewrites the planned head's content, so publishing it on top of
+    * a racing commit would drop that commit. Nothing was published;
+    * rerunning the operation plans against the new head. An
+    * `IllegalArgumentException`, like every other refused commit.
+    */
+  private[sources] final class ConcurrentCommitException(op: String,
+                                                         planned: Option[Int],
+                                                         found: Option[Int])
+    extends IllegalArgumentException(s"concurrent commit during $op (head moved " +
+      s"${planned.fold("none")("v" + _)} -> ${found.fold("none")("v" + _)}); rerun")
+
+  /** THE commit path: publish the next version of chain `c` and return
+    * it. Each attempt resolves the head, builds the version on top of it
+    * (`next(head)` — a rebasing commit recomputes its body from whatever
+    * head the winning racer left, so appends stay serializable without
+    * locks), writes the headers in their fixed order (`# ts=`,
+    * `# fork=`, `# token=`, `# dataChange=false`, `# schema=`) and
+    * claims the slot head+1 through [[createExclusive]].
+    */
+  private def commit(spark: SparkSession, c: Chain)(next: Option[Int] => Version): Int = {
     val f = fs(spark, c.table)
     var attempt = 0
     while (attempt < 50) {
@@ -1251,27 +1285,60 @@ object Snapshots {
       // iteration's probe loop walks to the real head — the slot, not
       // the hint, is what serializes commits.
       val head = chainHead(spark, c)
-      val next = head.getOrElse(0) + 1
-      val lines = (TimeHeader + System.currentTimeMillis()) +: base(head)
-      val bytes = (lines.mkString("\n") + "\n").getBytes("UTF-8")
-      if (createExclusive(f, c.manifestPath(next), bytes)) {
-        writeHeadHint(f, c, next) // advisory; next resolver probes forward
-        return next
+      val v = next(head)
+      val slot = head.getOrElse(0) + 1
+      val lines = Seq(TimeHeader + System.currentTimeMillis()) ++
+        v.fork.map(ForkHeader + _) ++ v.token.map(TokenHeader + _) ++
+        (if (v.maintenance) Seq(DataChangeFalseHeader) else Nil) ++
+        v.schema.map(st => SchemaHeader + relaxed(st).json) ++ v.body
+      if (createExclusive(f, c.manifestPath(slot),
+        (lines.mkString("\n") + "\n").getBytes("UTF-8"))) {
+        writeHeadHint(f, c, slot) // advisory; next resolver probes forward
+        return slot
       }
       attempt += 1
     }
     sys.error(s"could not commit to ${c.label} after 50 attempts")
   }
 
-  private def schemaLine(st: StructType): String = SchemaHeader + st.json
+  /** [[commit]] of a version PLANNED against `head` (None: the empty
+    * chain) for operation `op`: it lands on top of that head or not at
+    * all ([[ConcurrentCommitException]]).
+    */
+  private def commitOnHead(spark: SparkSession, c: Chain, op: String,
+                           head: Option[Int], v: Version): Int =
+    commit(spark, c) { h =>
+      if (h != head) throw new ConcurrentCommitException(op, head, h)
+      v
+    }
+
+  /** Validate a commit token and its replay horizon, and say whether
+    * the token already landed within the horizon — the replay lookup of
+    * every tokened commit.
+    */
+  private def replayed(spark: SparkSession, table: String, token: String,
+                       replayHorizon: Int): Boolean = {
+    require(!token.contains("\n") && !token.contains("\r"),
+      "token must be single-line")
+    require(replayHorizon >= 1, "replayHorizon must be >= 1")
+    // horizon-bounded dedup scan: O(horizon) manifest reads per commit
+    // instead of O(versions) — see committedTokens. Tokens older than
+    // the horizon are forgotten for dedup, which matches the source's
+    // own replay bound (a streaming checkpoint never replays a batch
+    // from 10⁵ commits ago).
+    committedTokens(spark, table, Some(replayHorizon)).contains(token)
+  }
+
+  /** Version `v`'s schema ([[versionSchema]]), required. */
+  private def schemaOf(spark: SparkSession, c: Chain, v: Int): StructType =
+    versionSchema(spark, c, v).getOrElse(sys.error(s"${c.label} v$v has no schema"))
 
   private def commitOverwriteChain(spark: SparkSession, c: Chain, df: DataFrame,
                                    statsCols: Seq[String],
                                    bucketCols: Map[String, Int] = Map.empty,
                                    token: Option[String] = None): Int = {
     val body = stageSegment(spark, c.table, df, statsCols, bucketCols)
-    publish(spark, c, _ => token.map(TokenHeader + _).toSeq ++
-      (schemaLine(relaxed(df.schema)) +: body))
+    commit(spark, c)(_ => Version(body, Some(df.schema), token))
   }
 
   /** Commit `df` as a full replacement snapshot. Old versions remain
@@ -1300,15 +1367,10 @@ object Snapshots {
     */
   def commitOverwriteOnce(spark: SparkSession, table: String, df: DataFrame,
                           token: String, replayHorizon: Int = 128,
-                          statsCols: Seq[String] = Nil): Option[Int] = {
-    require(!token.contains("\n") && !token.contains("\r"),
-      "token must be single-line")
-    require(replayHorizon >= 1, "replayHorizon must be >= 1")
-    if (committedTokens(spark, table, Some(replayHorizon)).contains(token))
-      None
+                          statsCols: Seq[String] = Nil): Option[Int] =
+    if (replayed(spark, table, token, replayHorizon)) None
     else Some(commitOverwriteChain(spark, mainChain(table), df, statsCols,
       token = Some(token)))
-  }
 
   /** The snapshot schema an append of `incoming` produces on top of
     * `head` — or a rejection. Without `evolve`, names and types must
@@ -1348,19 +1410,16 @@ object Snapshots {
   }
 
   /** Auto-fold threshold: once a head version's body carries this many
-    * reference lines (one per commit since the last fold/overwrite),
-    * the next append first publishes a [[checkpointMetadataCommit]].
-    * Keeps the O(commits) body copy every append pays BOUNDED — at 10⁴
-    * tiny commits the un-folded body is ~440 KB re-written per commit
-    * (SURVEY.md, Appendix A r16) — without ever rewriting data. 256 references
-    * ≈ 11 KB body; the fold itself costs one read of every live
-    * segment (O(files) driver-side lines), amortized to O(files/256)
-    * per append.
+    * FOLDABLE reference lines (one per commit since the last
+    * fold/overwrite), the next append first publishes a
+    * [[checkpointMetadataCommit]]. Keeps the O(commits) body copy every
+    * append pays BOUNDED — at 10⁴ tiny commits the un-folded body is
+    * ~440 KB re-written per commit (SURVEY.md, Appendix A r16) — without
+    * ever rewriting data. 256 references ≈ 11 KB body; the fold itself
+    * costs one read of every live segment (O(files) driver-side lines),
+    * amortized to O(files/256) per append.
     */
-  private val FoldThresholdDefault = 256
-  private def foldThreshold(spark: SparkSession): Int =
-    spark.conf.getOption("graft.snapshot.foldThreshold")
-      .map(_.toInt).getOrElse(FoldThresholdDefault)
+  private val FoldThreshold = 256
 
   /** METADATA CHECKPOINT: fold the head's segment-reference chain into
     * ONE fresh segment per merge-on-read group — zero data movement
@@ -1373,19 +1432,29 @@ object Snapshots {
     * O(table) data rewrite (9.8 s vs zero data bytes at the probe's
     * 10⁴-commit shape): the Delta checkpoint idea expressed in this
     * format's segment terms. Runs automatically from the append path
-    * past the fold threshold (graft.snapshot.foldThreshold, default 256); callable directly for scheduled
-    * maintenance. No-ops (returns the head) when every group already
-    * holds at most one reference.
+    * past [[FoldThreshold]] (256) foldable references; callable
+    * directly for scheduled maintenance. No-ops (returns the head) when
+    * every group already holds at most one reference.
     */
   def checkpointMetadataCommit(spark: SparkSession, table: String): Int = {
+    val head = resolveChainVersion(spark, mainChain(table), None)
+    foldCommit(spark, table, head, 1).getOrElse(head)
+  }
+
+  /** Publish the metadata fold of main version `head`, planned on it,
+    * when its body holds at least `minFoldable` FOLDABLE references —
+    * the lines a fold can actually remove (group size beyond 1 each;
+    * delete refs and singleton groups are irreducible). Counting raw
+    * body lines would make a delete-heavy table (2·deletes+1
+    * irreducible lines past the threshold) publish a useless
+    * maintenance version on EVERY append forever.
+    */
+  private def foldCommit(spark: SparkSession, table: String, head: Int,
+                         minFoldable: Int): Option[Int] = {
     val c = mainChain(table)
-    val head = chainHead(spark, c)
-      .getOrElse(sys.error(s"$table has no committed versions"))
-    val body = bodyLines(spark, c, head)
-    val (groups, deletes) = morPartition(body)
-    if (groups.forall(_.size <= 1)) return head
-    val schema = versionSchema(spark, c, head).getOrElse(
-      sys.error(s"$table v$head has no schema to checkpoint under"))
+    val (groups, deletes) = morPartition(bodyLines(spark, c, head))
+    if (groups.map(g => math.max(0, g.size - 1)).sum < minFoldable) return None
+    val schema = schemaOf(spark, c, head)
     def fold(group: Seq[String]): Seq[String] =
       if (group.size <= 1) group
       else Seq(writeSegment(spark, table, expand(spark, table, group)))
@@ -1393,63 +1462,49 @@ object Snapshots {
     val newBody = folded.head ++ deletes.zipWithIndex.flatMap {
       case ((kc, seg), i) => (DelRef + enc(kc) + ":" + seg) +: folded(i + 1)
     }
-    publish(spark, c, h => {
-      require(h.contains(head),
-        s"concurrent commit during metadata checkpoint (head moved " +
-          s"$head -> $h); rerun")
-      DataChangeFalseHeader +: schemaLine(relaxed(schema)) +: newBody
-    })
+    Some(commitOnHead(spark, c, "metadata checkpoint", Some(head),
+      Version(newBody, Some(schema), maintenance = true)))
   }
+
+  /** The append path's fold of main version `head` past `foldThreshold`
+    * foldable references. Best-effort: the fold publishes on top of
+    * `head`, and a RACING commit legitimately moves it — the user's
+    * append must not die for a failed maintenance opportunity
+    * ([[commit]]'s own retry loop keeps appends lock-free), so a lost
+    * race skips the fold and the next append past the threshold tries
+    * again.
+    */
+  private[sources] def autoFold(spark: SparkSession, table: String, head: Int,
+                                foldThreshold: Int): Unit =
+    try { foldCommit(spark, table, head, foldThreshold); () }
+    catch { case _: ConcurrentCommitException => () }
 
   /** The shared append path: stage once, then publish headers + the
     * head's body references + one new segment reference. Metadata cost
     * is O(delta + commits since last overwrite), never O(files) — and
-    * BOUNDED: past the fold threshold in body lines the append first folds
-    * the head's references into a [[checkpointMetadataCommit]] (its own
-    * dataChange=false version, so a fold+append never breaks the
-    * incremental readers' span diff). Main chain only — branches are
-    * short-lived and their merge laws compare bodies against the fork.
+    * BOUNDED: past `foldThreshold` foldable references the append first
+    * folds the head ([[autoFold]]: its own dataChange=false version, so
+    * a fold+append never breaks the incremental readers' span diff).
+    * Main chain only — branches are short-lived and their merge laws
+    * compare bodies against the fork.
     */
   private def appendChain(spark: SparkSession, c: Chain, df: DataFrame,
                           statsCols: Seq[String], evolve: Boolean,
                           token: Option[String],
-                          bucketCols: Map[String, Int] = Map.empty): Int = {
+                          bucketCols: Map[String, Int] = Map.empty,
+                          foldThreshold: Int = FoldThreshold): Int = {
     if (c.dir == ManifestDir)
-      chainHead(spark, c).foreach { v =>
-        // trigger on FOLDABLE references — the lines a fold can actually
-        // remove (group size beyond 1 each; delete refs and singleton
-        // groups are irreducible). Counting raw body lines would make a
-        // delete-heavy table (2·deletes+1 irreducible lines past the
-        // threshold) publish a useless maintenance version on EVERY
-        // append forever.
-        val (groups, _) = morPartition(bodyLines(spark, c, v))
-        val foldable = groups.foldLeft(0)((a, g) => a + math.max(0, g.size - 1))
-        if (foldable >= foldThreshold(spark)) {
-          // best-effort: the fold publishes on top of the head it read,
-          // and a RACING commit legitimately moves it — the user's
-          // append must not die for a failed maintenance opportunity
-          // (publish()'s own retry loop keeps appends lock-free); the
-          // next append past the threshold simply tries again
-          try { checkpointMetadataCommit(spark, c.table); () }
-          catch {
-            case e: IllegalArgumentException if e.getMessage != null &&
-              e.getMessage.contains("concurrent commit during metadata " +
-                "checkpoint") => ()
-          }
-        }
-      }
+      chainHead(spark, c).foreach(autoFold(spark, c.table, _, foldThreshold))
     // fail fast before paying the staging write; re-validated per retry
-    // inside the publish closure (the head — and its schema — may move)
+    // inside the commit (the head — and its schema — may move)
     chainHead(spark, c).foreach(v =>
       evolvedSchema(versionSchema(spark, c, v), df.schema, evolve, c.label))
     val segBody = stageSegment(spark, c.table, df, statsCols, bucketCols)
-    publish(spark, c, head => {
-      val snapshot = evolvedSchema(
-        head.flatMap(versionSchema(spark, c, _)), df.schema, evolve, c.label)
-      token.map(TokenHeader + _).toSeq ++
-        (schemaLine(snapshot) +:
-          (head.map(bodyLines(spark, c, _)).getOrElse(Seq.empty) ++ segBody))
-    })
+    commit(spark, c) { head =>
+      Version(head.map(bodyLines(spark, c, _)).getOrElse(Seq.empty) ++ segBody,
+        Some(evolvedSchema(head.flatMap(versionSchema(spark, c, _)), df.schema,
+          evolve, c.label)), token)
+    }
   }
 
   /** Commit `df` appended to the (retry-time) head snapshot. With
@@ -1461,6 +1516,14 @@ object Snapshots {
                    evolve: Boolean = false,
                    bucketCols: Map[String, Int] = Map.empty): Int =
     appendChain(spark, mainChain(table), df, statsCols, evolve, None, bucketCols)
+
+  /** [[commitAppend]] with the auto-fold threshold given instead of
+    * [[FoldThreshold]] — how specs reach the fold at a few commits.
+    */
+  private[sources] def commitAppend(spark: SparkSession, table: String,
+                                    df: DataFrame, foldThreshold: Int): Int =
+    appendChain(spark, mainChain(table), df, Nil, evolve = false, None,
+      foldThreshold = foldThreshold)
 
   /** A requested stats range for [[readPrunedWhere]] — one per column,
     * combined as a CONJUNCTION. Bounds are inclusive. String bounds
@@ -1653,19 +1716,9 @@ object Snapshots {
   def commitAppendOnce(spark: SparkSession, table: String, df: DataFrame,
                        token: String, replayHorizon: Int = 128,
                        evolve: Boolean = false,
-                       statsCols: Seq[String] = Nil): Option[Int] = {
-    require(!token.contains("\n") && !token.contains("\r"),
-      "token must be single-line")
-    require(replayHorizon >= 1, "replayHorizon must be >= 1")
-    // horizon-bounded dedup scan: O(horizon) manifest reads per commit
-    // instead of O(versions) — see committedTokens. Tokens older than
-    // the horizon are forgotten for dedup, which matches the source's
-    // own replay bound (a streaming checkpoint never replays a batch
-    // from 10⁵ commits ago).
-    if (committedTokens(spark, table, Some(replayHorizon)).contains(token))
-      return None
-    Some(appendChain(spark, mainChain(table), df, statsCols, evolve, Some(token)))
-  }
+                       statsCols: Seq[String] = Nil): Option[Int] =
+    if (replayed(spark, table, token, replayHorizon)) None
+    else Some(appendChain(spark, mainChain(table), df, statsCols, evolve, Some(token)))
 
   /** Incremental read: the rows ADDED between `fromVersion` (exclusive)
     * and `toVersion` (inclusive, default head) — the files `toVersion`
@@ -2126,29 +2179,17 @@ object Snapshots {
       smallFileBytes <= targetFileBytes,
       "need 0 < smallFileBytes <= targetFileBytes")
     val c = mainChain(table)
-    val head = chainHead(spark, c)
-      .getOrElse(sys.error(s"$table has no committed versions"))
+    val head = resolveChainVersion(spark, c, None)
     requireNoMorDeletes(spark, c, head)
     val es = manifestEntries(spark, c, head)
     val (small, big) = es.partition(_.size.forall(_ < smallFileBytes))
     if (small.size < 2) return head
-    val schema = versionSchema(spark, c, head)
+    val schema = schemaOf(spark, c, head)
     val bytes = small.flatMap(_.size).sum
     val n = math.max(1, math.ceil(bytes.toDouble / targetFileBytes).toInt)
-    val packed = scan(spark, table, schema, small).repartition(n)
-    val body = stageSegment(spark, table, packed, statsCols, bucketCols)
-    val carryBody =
-      if (big.isEmpty) Seq.empty
-      else Seq(writeSegment(spark, table, big.map(renderEntry)))
-    publish(spark, c, h => {
-      require(h.contains(head),
-        s"concurrent commit during small-file compaction (head moved " +
-          s"$head -> $h); rerun")
-      DataChangeFalseHeader +:
-        schemaLine(relaxed(schema.getOrElse(
-          sys.error(s"$table v$head has no schema to compact under")))) +:
-        (carryBody ++ body)
-    })
+    rewriteCommit(spark, table, "small-file compaction", head, schema, big,
+      Some(scan(spark, table, Some(schema), small).repartition(n)), statsCols,
+      bucketCols, maintenance = true)
   }
 
   /** OPTIMIZE for bucket layouts: compaction + re-cluster by the bucket
@@ -2172,8 +2213,7 @@ object Snapshots {
                                 bucketCols: Map[String, Int] = Map.empty): Int = {
     require(targetFileBytes > 0, "targetFileBytes must be positive")
     val c = mainChain(table)
-    val head = chainHead(spark, c)
-      .getOrElse(sys.error(s"$table has no committed versions"))
+    val head = resolveChainVersion(spark, c, None)
     val es = manifestEntries(spark, c, head)
     val f = fs(spark, table)
     // committed lengths when every entry has one (post-r15 commits):
@@ -2182,20 +2222,38 @@ object Snapshots {
       if (es.forall(_.size.isDefined)) es.flatMap(_.size).sum
       else es.map(e => f.getFileStatus(new Path(table, e.path)).getLen).sum
     val n = math.max(1, math.ceil(bytes.toDouble / targetFileBytes).toInt)
+    // compaction reads the head snapshot (merge-on-read deletes applied,
+    // so folding them preserves the LOGICAL row set) and re-stages the
+    // same rows: the version is a maintenance commit
     val source = read(spark, table, Some(head))
-    val body = stageSegment(spark, table, arrange(source, n), statsCols, bucketCols)
-    // commit on TOP OF the head we compacted: if someone else committed
-    // meanwhile, compacting over it would silently drop their commit —
-    // fail instead (compaction is maintenance; rerun it)
-    publish(spark, c, h => {
-      require(h.contains(head),
-        s"concurrent commit during compaction (head moved $head -> $h); rerun")
-      // maintenance claim: this version's logical rows equal v(head)'s
-      // exactly — compaction reads the head snapshot (merge-on-read
-      // deletes applied, so folding them preserves the LOGICAL row set)
-      // and re-stages the same rows; incremental readers skip it
-      DataChangeFalseHeader +: schemaLine(relaxed(source.schema)) +: body
-    })
+    rewriteCommit(spark, table, "compaction", head, source.schema, Nil,
+      Some(arrange(source, n)), statsCols, bucketCols, maintenance = true)
+  }
+
+  /** The one REWRITE commit, planned on main version `head` (a racing
+    * commit fails it with [[ConcurrentCommitException]] — rewriting over
+    * it would silently drop it; rerun). Its body is a carry segment of
+    * the head entries kept BY REFERENCE (their original lines: size,
+    * rows, stats, bucket and NULL cells, in sorted cell order) plus one
+    * staged segment of `content`. Compaction rewrites everything and
+    * carries nothing; small-file compaction rewrites the small files and
+    * carries the big ones; the partial rewrites and merge rewrite the
+    * touched files (merge plus its upserts) and carry the rest.
+    */
+  private[sources] def rewriteCommit(spark: SparkSession, table: String, op: String,
+                                     head: Int, schema: StructType, carry: Seq[Entry],
+                                     content: Option[DataFrame], statsCols: Seq[String],
+                                     bucketCols: Map[String, Int] = Map.empty,
+                                     maintenance: Boolean = false,
+                                     token: Option[String] = None): Int = {
+    val staged = content.toSeq.flatMap(stageSegment(spark, table, _, statsCols, bucketCols))
+    val carried =
+      if (carry.isEmpty) Seq.empty
+      else Seq(writeSegment(spark, table, carry.map(e => renderLine(e.path, e.size,
+        e.rows, e.stats.toSeq.sortBy(_._1), e.buckets.toSeq.sortBy(_._1),
+        e.nulls.toSeq.sortBy(_._1)))))
+    commitOnHead(spark, mainChain(table), op, Some(head),
+      Version(carried ++ staged, Some(schema), token, maintenance))
   }
 
   /** The per-file rewrite plan of a stats-pruned delete: `rewrite` holds
@@ -2297,32 +2355,21 @@ object Snapshots {
       keyTouches(_, keyCol, ks, tableDt))
   }
 
-  /** Shared tail of the stats-pruned delete commits: rewrite only
-    * `plan.rewrite`'s files through `purge`, carry `plan.carry`'s
-    * ORIGINAL manifest lines (stats and all) into the new version as a
-    * fresh segment, and publish on top of the planned head.
+  /** Shared tail of the stats-pruned DML commits: rewrite only
+    * `plan.rewrite`'s files through `purge` and carry `plan.carry` by
+    * reference ([[rewriteCommit]]), on top of the planned head.
     */
-  private def partialRewriteCommit(spark: SparkSession, table: String,
+  private def partialRewriteCommit(spark: SparkSession, table: String, op: String,
                                    head: Int, plan: RewritePlan,
                                    purge: DataFrame => DataFrame,
                                    statsCols: Seq[String]): Int = {
     val c = mainChain(table)
     requireNoMorDeletes(spark, c, head)
-    val schema = versionSchema(spark, c, head)
-    val body =
-      if (plan.rewrite.isEmpty) Seq.empty
-      else stageSegment(spark, table,
-        purge(scan(spark, table, schema, plan.rewrite)), statsCols)
-    val carryBody =
-      if (plan.carry.isEmpty) Seq.empty
-      else Seq(writeSegment(spark, table, plan.carry.map(renderEntry)))
-    publish(spark, c, h => {
-      require(h.contains(head),
-        s"concurrent commit during delete rewrite (head moved $head -> $h); rerun")
-      schemaLine(relaxed(schema.getOrElse(
-        sys.error(s"$table v$head has no schema to rewrite under")))) +:
-        (carryBody ++ body)
-    })
+    val schema = schemaOf(spark, c, head)
+    rewriteCommit(spark, table, op, head, schema, plan.carry,
+      if (plan.rewrite.isEmpty) None
+      else Some(purge(scan(spark, table, Some(schema), plan.rewrite))),
+      statsCols)
   }
 
   /** Partial-rewrite commits (erase purge, retention delete, merge)
@@ -2334,17 +2381,6 @@ object Snapshots {
     require(!hasMorDeletes(bodyLines(spark, c, v)),
       s"${c.label} v$v has merge-on-read delete files; compactCommit to " +
         "fold them before a partial-rewrite commit")
-
-  private def renderEntry(e: Entry): String =
-    (e.path +: (e.size.map(SizeCell + _).toSeq ++
-      e.rows.map(RowsCell + _).toSeq ++
-      e.stats.toSeq.sortBy(_._1).map { case (c, st) =>
-        s"${enc(c)}=${st.kind}:${enc(st.lo)}:${enc(st.hi)}"
-      } ++ e.buckets.toSeq.sortBy(_._1).map { case (c, b) =>
-        s"$BucketCellPrefix${enc(c)}=${b.mod}:${b.ids.mkString(",")}"
-      } ++ e.nulls.toSeq.sortBy(_._1).map { case (c, n) =>
-        s"$NullsCellPrefix${enc(c)}=$n"
-      })).mkString("\t")
 
   /** Row-level erasure, the PHYSICAL half (GDPR "right to be forgotten"):
     * rewrite the head snapshot with every row whose `keyCol` equals a
@@ -2382,12 +2418,10 @@ object Snapshots {
                        ignoreClonePins: Boolean = false): Int = {
     import org.apache.spark.sql.functions.{broadcast, col}
     requireNoClonePins(spark, table, ignoreClonePins, "erasePurgeCommit")
-    val c = mainChain(table)
-    val head = chainHead(spark, c)
-      .getOrElse(sys.error(s"$table has no committed versions"))
+    val head = resolveChainVersion(spark, mainChain(table), None)
     val plan = erasePlan(spark, table, keyCol, keys, Some(head))
     val req = broadcast(keys.toDF("__graft_erase_key").distinct())
-    partialRewriteCommit(spark, table, head, plan,
+    partialRewriteCommit(spark, table, "erase purge", head, plan,
       src => src.join(req, qcol(keyCol) === col("__graft_erase_key"), "left_anti"),
       statsCols)
   }
@@ -2434,10 +2468,7 @@ object Snapshots {
     require(keys.columns.length == 1,
       s"keys must be a single-column request list, got ${keys.columns.mkString(",")}")
     val c = mainChain(table)
-    val head0 = chainHead(spark, c)
-      .getOrElse(sys.error(s"$table has no committed versions"))
-    val st = versionSchema(spark, c, head0)
-      .getOrElse(sys.error(s"$table v$head0 has no schema"))
+    val st = schemaOf(spark, c, resolveChainVersion(spark, c, None))
     require(st.fieldNames.contains(keyCol),
       s"$keyCol is not a column of $table (${st.fieldNames.mkString(",")})")
     val want = relaxType(st(keyCol).dataType)
@@ -2464,20 +2495,18 @@ object Snapshots {
     // OVERWRITE may drop or retype it — re-validate per retry, or the
     // published head would be unreadable (morScanChain resolves the
     // delete key's type from the version's own schema)
-    publish(spark, c, headOpt => {
+    commit(spark, c) { headOpt =>
       val h = headOpt.getOrElse(sys.error(s"$table lost its versions mid-commit"))
       if (delBody.nonEmpty) {
-        val hs = versionSchema(spark, c, h).getOrElse(
-          sys.error(s"$table v$h has no schema"))
+        val hs = schemaOf(spark, c, h)
         require(hs.fieldNames.contains(keyCol) &&
           relaxType(hs(keyCol).dataType) == want,
           s"$table's head moved to v$h whose schema lost or retyped " +
             s"$keyCol (a concurrent overwrite); re-run the erase against " +
             "the new shape")
       }
-      chainSchema(spark, c, h).map(schemaLine).toSeq ++
-        bodyLines(spark, c, h) ++ delBody
-    })
+      Version(bodyLines(spark, c, h) ++ delBody, chainSchema(spark, c, h))
+    }
   }
 
   /** The [[deleteWhereCommit]] rewrite plan — which head files a
@@ -2514,16 +2543,14 @@ object Snapshots {
                         ignoreClonePins: Boolean = false): Int = {
     import org.apache.spark.sql.functions.{coalesce, lit, not}
     requireNoClonePins(spark, table, ignoreClonePins, "deleteWhereCommit")
-    val c = mainChain(table)
-    val head = chainHead(spark, c)
-      .getOrElse(sys.error(s"$table has no committed versions"))
+    val head = resolveChainVersion(spark, mainChain(table), None)
     val plan = deletePlan(spark, table, ranges, Some(head))
     // SQL DELETE WHERE semantics: a row where the conjunction evaluates
     // to NULL (a NULL in a range column) is NOT matched and must
     // survive — without the coalesce, filter(not(NULL)) would drop it
     // in rewritten files while the identical row in a carried file
     // survived, making row fate depend on physical placement
-    partialRewriteCommit(spark, table, head, plan,
+    partialRewriteCommit(spark, table, "delete where", head, plan,
       src => src.filter(not(coalesce(
         ranges.map(rowPredicate).reduce(_ && _), lit(false)))),
       statsCols)
@@ -2636,15 +2663,13 @@ object Snapshots {
     import org.apache.spark.sql.functions.{coalesce, col, lit, when}
     require(set.nonEmpty, "at least one SET assignment required")
     val c = mainChain(table)
-    val head = chainHead(spark, c)
-      .getOrElse(sys.error(s"$table has no committed versions"))
-    val schema = versionSchema(spark, c, head)
-      .getOrElse(sys.error(s"$table v$head has no schema to update under"))
+    val head = resolveChainVersion(spark, c, None)
+    val schema = schemaOf(spark, c, head)
     set.keys.foreach(k => require(schema.fieldNames.contains(k),
       s"SET column $k is not a column of $table (${schema.fieldNames.mkString(",")})"))
     val plan = deletePlan(spark, table, ranges, Some(head))
     val matched = coalesce(ranges.map(rowPredicate).reduce(_ && _), lit(false))
-    partialRewriteCommit(spark, table, head, plan,
+    partialRewriteCommit(spark, table, "update where", head, plan,
       src => src.select(schema.fieldNames.toSeq.map { f =>
         // simultaneous assignment: every RHS reads the pre-update row
         // (select evaluates all exprs against the input), matched rows
@@ -2824,17 +2849,11 @@ object Snapshots {
     // return the current head instead of appending a content-identical
     // version per crash replay. Merge stays effect-idempotent without a
     // token; the token only stops replays from GROWING the history.
-    token.foreach { t =>
-      require(!t.contains("\n") && !t.contains("\r"), "token must be single-line")
-      require(replayHorizon >= 1, "replayHorizon must be >= 1")
-    }
-    if (token.exists(committedTokens(spark, table, Some(replayHorizon)).contains))
-      return chainVersions(spark, c).last
-    val head = chainHead(spark, c)
-      .getOrElse(sys.error(s"$table has no committed versions"))
+    if (token.exists(replayed(spark, table, _, replayHorizon)))
+      return resolveChainVersion(spark, c, None)
+    val head = resolveChainVersion(spark, c, None)
     requireNoMorDeletes(spark, c, head)
-    val headSchema = versionSchema(spark, c, head)
-      .getOrElse(sys.error(s"$table v$head has no schema to merge into"))
+    val headSchema = schemaOf(spark, c, head)
     val targetCols = headSchema.fields.map(_.name).toSeq
     require(targetCols.contains(keyCol),
       s"key column $keyCol is not a target column (${targetCols.mkString(",")})")
@@ -2896,16 +2915,8 @@ object Snapshots {
         else scan(spark, table, Some(headSchema), plan.rewrite)
           .join(keys, Seq(keyCol), "left_anti")
           .unionByName(upserts)
-      val body = stageSegment(spark, table, newContent, statsCols)
-      val carryBody =
-        if (plan.carry.isEmpty) Seq.empty
-        else Seq(writeSegment(spark, table, plan.carry.map(renderEntry)))
-      publish(spark, c, h => {
-        require(h.contains(head),
-          s"concurrent commit during merge (head moved $head -> $h); rerun")
-        token.map(TokenHeader + _).toSeq ++
-          (schemaLine(relaxed(headSchema)) +: (carryBody ++ body))
-      })
+      rewriteCommit(spark, table, "merge", head, headSchema, plan.carry,
+        Some(newContent), statsCols, token = token)
     } finally { fs(spark, table).delete(stagedBatch, true); () }
   }
 
@@ -3004,9 +3015,8 @@ object Snapshots {
   def rollbackCommit(spark: SparkSession, table: String, toVersion: Int): Int = {
     val c = mainChain(table)
     val v = resolveChainVersion(spark, c, Some(toVersion))
-    val schema = versionSchema(spark, c, v)
-    val body = bodyLines(spark, c, v)
-    publish(spark, c, _ => schema.map(schemaLine).toSeq ++ body)
+    val version = Version(bodyLines(spark, c, v), versionSchema(spark, c, v))
+    commit(spark, c)(_ => version)
   }
 
   /** What [[cloneTable]] created: the clone's first version (always 1)
@@ -3192,12 +3202,8 @@ object Snapshots {
         (DelRef + enc(kc) + ":" + keySeg.substring(SegRef.length)) +:
           cloneGroup(groups(i + 1))
     }
-    val dv = publish(spark, mainChain(dst), h => {
-      require(h.isEmpty,
-        s"$dst gained commits during the clone; clone into a fresh root")
-      schema.map(schemaLine).toSeq ++ body
-    })
-    CloneInfo(dv, tag)
+    CloneInfo(commitOnHead(spark, mainChain(dst), "clone", None,
+      Version(body, schema)), tag)
   }
 
   // ----------------------------------------------------------- branches
@@ -3219,9 +3225,9 @@ object Snapshots {
     * land on the branch through [[commitAppendToBranch]] /
     * [[commitOverwriteToBranch]] without touching main, and
     * [[fastForwardMerge]] folds the branch back when main has not moved.
-    * Creation is atomic: the branch's v1 goes through the same
-    * create-if-absent slot as every manifest, so two racers cannot both
-    * create the name.
+    * Creation is atomic: the branch's v1 is a commit planned on the
+    * empty branch chain, so of two racers creating the name one lands
+    * and the other fails with [[ConcurrentCommitException]].
     */
   def createBranch(spark: SparkSession, table: String, name: String,
                    fromVersion: Option[Int] = None): Unit = {
@@ -3229,12 +3235,11 @@ object Snapshots {
     val main = mainChain(table)
     val from = resolveChainVersion(spark, main, fromVersion)
     val c = branchChain(table, name)
-    val schema = chainSchema(spark, main, from)
-    val lines = (ForkHeader + from) +:
-      (schema.map(schemaLine).toSeq ++ bodyLines(spark, main, from))
-    val bytes = (lines.mkString("\n") + "\n").getBytes("UTF-8")
-    require(createExclusive(fs(spark, table), c.manifestPath(1), bytes),
+    require(chainHead(spark, c).isEmpty,
       s"$table already has a branch '$name' (dropBranch first to recreate)")
+    commitOnHead(spark, c, s"branch create '$name'", None, Version(
+      bodyLines(spark, main, from), chainSchema(spark, main, from), fork = Some(from)))
+    ()
   }
 
   /** The main version a branch forked from (recorded in its v1). */
@@ -3279,9 +3284,10 @@ object Snapshots {
     * version whose body is the branch head's segment references (zero
     * data movement — the branch's files become main's). Requires main
     * not to have moved since the fork — a diverged main is a data
-    * decision (rebase the branch or overwrite), not a format one; the
-    * check re-runs inside the publish slot, so a racing main commit
-    * loses cleanly. Returns the new main version.
+    * decision (recreate the branch from the new head, [[mergeBranch]]
+    * the appends, or overwrite), not a format one: the commit is planned
+    * on the fork version, so a moved main, racing or not, fails with
+    * [[ConcurrentCommitException]]. Returns the new main version.
     */
   def fastForwardMerge(spark: SparkSession, table: String, name: String): Int = {
     val main = mainChain(table)
@@ -3290,16 +3296,8 @@ object Snapshots {
     require(bvs.nonEmpty, s"$table has no branch '$name'")
     val bhead = bvs.last
     val fork = branchFork(spark, table, name)
-    val schema = versionSchema(spark, c, bhead)
-    val body = bodyLines(spark, c, bhead)
-    publish(spark, main, h => {
-      require(h.contains(fork),
-        s"non-fast-forward merge: $table main moved since branch '$name' " +
-          s"forked at v$fork (head now v${h.getOrElse(0)}); recreate the " +
-          "branch from the new head or commitOverwrite the decision")
-      schemaLine(relaxed(schema.getOrElse(
-        sys.error(s"${c.label} v$bhead has no schema")))) +: body
-    })
+    commitOnHead(spark, main, s"fast-forward merge of branch '$name' forked at v$fork",
+      Some(fork), Version(bodyLines(spark, c, bhead), Some(schemaOf(spark, c, bhead))))
   }
 
   /** Merge a branch into a DIVERGED main — the append-append case
@@ -3345,7 +3343,7 @@ object Snapshots {
     val forkBody = bodyLines(spark, main, fork)
     def shape(st: StructType) =
       relaxed(st).fields.map(f => (f.name, f.dataType)).toSeq
-    publish(spark, main, hOpt => {
+    commit(spark, main) { hOpt =>
       val h = hOpt.getOrElse(sys.error(s"$table lost its versions mid-merge"))
       val bhead = chainVersions(spark, bc).last
       val branchBody = bodyLines(spark, bc, bhead)
@@ -3359,8 +3357,7 @@ object Snapshots {
           "fork; a delete's scope is its body order, which a merge would " +
           "re-interleave with main's appends — merge the appends from a " +
           "clean branch and re-run the erase on the merged head")
-      val bSchema = versionSchema(spark, bc, bhead).getOrElse(
-        sys.error(s"${bc.label} v$bhead has no schema"))
+      val bSchema = schemaOf(spark, bc, bhead)
       val mainBody = bodyLines(spark, main, h)
       // main-side MAINTENANCE since the fork (dataChange=false folds /
       // compactions) is fine: main's current body references the same
@@ -3381,18 +3378,17 @@ object Snapshots {
           "scope is a data decision — re-run the erase on the merged " +
           "head if it must cover them (fold main's deletes + rebase " +
           "otherwise)")
-      val mSchema = versionSchema(spark, main, h).getOrElse(
-        sys.error(s"$table v$h has no schema"))
+      val mSchema = schemaOf(spark, main, h)
       val (ms, bs) = (shape(mSchema), shape(bSchema))
       val merged =
-        if (bs.startsWith(ms)) relaxed(bSchema)
-        else if (ms.startsWith(bs)) relaxed(mSchema)
+        if (bs.startsWith(ms)) bSchema
+        else if (ms.startsWith(bs)) mSchema
         else sys.error(s"$table branch '$name' and main diverged to " +
           s"incompatible schemas (${bs.mkString(",")} vs " +
           s"${ms.mkString(",")}); only additive trailing-column " +
           "evolution merges")
-      schemaLine(merged) +: (mainBody ++ branchDelta)
-    })
+      Version(mainBody ++ branchDelta, Some(merged))
+    }
   }
 
   /** Delete a branch ref and its chain. Its data files and segments
@@ -3548,8 +3544,7 @@ object Snapshots {
       else {
         // head via the hint — the caught-up tick (the steady state of a
         // high-frequency consumer) costs O(1) filesystem calls, no LIST
-        val head = chainHead(spark, mainChain(table)).getOrElse(
-          sys.error(s"$table has no committed versions"))
+        val head = resolveChainVersion(spark, mainChain(table), None)
         if (head <= base) return None // caught up
         // plan-before-process: the window is durable before any effect;
         // a racing ticker's create wins once and both re-read the winner

@@ -53,7 +53,7 @@ class CheckpointReleaseSpec extends SparkTestBase {
     val seeds = Seq((0L, 1L), (7L, 3L)).toDF("id", "weight")
     val builds = Seq[(String, () => DataFrame)](
       "connectedComponents" -> (() => Components.connectedComponents(
-        edges.filter(col("src") % 5 =!= 0), "src", "dst", localThreshold = 0L)),
+        edges.filter(col("src") % 5 =!= 0), "src", "dst", 20, 0L)),
       "pagerank" -> (() => LinkGraph.pagerank(edges, nodes, "src", "dst", "id", 3,
         1000000000000L, 85L, 100L, Some(seeds), 0L)),
       "hits" -> (() => LinkGraph.hits(edges, nodes, "src", "dst", "id", 3, 1000000L, 0L)))

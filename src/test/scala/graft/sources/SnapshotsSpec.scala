@@ -1658,59 +1658,56 @@ class SnapshotsSpec extends SparkTestBase {
   test("auto-fold: appends past graft.snapshot.foldThreshold fold the " +
        "body before appending, keeping the per-commit body copy bounded") {
     val t = freshTable()
-    spark.conf.set("graft.snapshot.foldThreshold", "4")
-    try {
-      (0 until 10).foreach(i =>
-        Snapshots.commitAppend(spark, t, Seq(i.toLong).toDF("id")))
-      // with threshold 4 the body never exceeds ~4 reference lines
-      val heads = Snapshots.versions(spark, t)
-      val bodies = heads.map { v =>
-        scala.io.Source.fromFile(f"$t/_manifests/v$v%08d.txt")
-          .getLines().count(!_.startsWith("#"))
-      }
-      assert(bodies.max <= 5, s"auto-fold must bound the body, got $bodies")
-      // every row still present exactly once
-      assert(Snapshots.read(spark, t).as[Long].collect().sorted.toSeq ==
-        (0L until 10L).toSeq)
-      // fold versions are maintenance; appends are not
-      val maint = heads.filter(Snapshots.isMaintenanceVersion(spark, t, _))
-      assert(maint.nonEmpty, "threshold 4 over 10 appends must auto-fold")
-      // an incremental consumer registered at v1 replays the whole data
-      // history across the interleaved folds
-      assert(Snapshots.readChangesBetween(spark, t, 1)
-        .select("id").as[Long].collect().toSet == (1L until 10L).toSet)
+    (0 until 10).foreach(i =>
+      Snapshots.commitAppend(spark, t, Seq(i.toLong).toDF("id"), 4))
+    // with threshold 4 the body never exceeds ~4 reference lines
+    val heads = Snapshots.versions(spark, t)
+    val bodies = heads.map { v =>
+      scala.io.Source.fromFile(f"$t/_manifests/v$v%08d.txt")
+        .getLines().count(!_.startsWith("#"))
+    }
+    assert(bodies.max <= 5, s"auto-fold must bound the body, got $bodies")
+    // every row still present exactly once
+    assert(Snapshots.read(spark, t).as[Long].collect().sorted.toSeq ==
+      (0L until 10L).toSeq)
+    // fold versions are maintenance; appends are not
+    val maint = heads.filter(Snapshots.isMaintenanceVersion(spark, t, _))
+    assert(maint.nonEmpty, "threshold 4 over 10 appends must auto-fold")
+    // an incremental consumer registered at v1 replays the whole data
+    // history across the interleaved folds
+    assert(Snapshots.readChangesBetween(spark, t, 1)
+      .select("id").as[Long].collect().toSet == (1L until 10L).toSet)
 
-      // the trigger counts FOLDABLE references, not raw body lines: a
-      // delete-heavy body past the threshold in IRREDUCIBLE lines
-      // (singleton groups + delete refs) must not publish a useless
-      // maintenance version per append forever
-      val t2 = freshTable()
-      (0 until 3).foreach { i =>
-        Snapshots.commitAppend(spark, t2,
-          Seq((10L * i, s"g$i")).toDF("id", "tag"))
-        Snapshots.eraseMoRCommit(spark, t2, "id", Seq(10L * i).toDF("k"))
-      }
-      // body: 3 singleton groups interleaved with 3 delete refs + the
-      // new tail each append — lines >= threshold 4, foldable ~0
-      val before = Snapshots.versions(spark, t2)
-      Snapshots.commitAppend(spark, t2, Seq((991L, "t")).toDF("id", "tag"))
-      Snapshots.commitAppend(spark, t2, Seq((992L, "t")).toDF("id", "tag"))
-      val mid = Snapshots.versions(spark, t2)
-      assert(mid.size == before.size + 2 &&
-        !mid.exists(v => !before.contains(v) &&
-          Snapshots.isMaintenanceVersion(spark, t2, v)),
-        "irreducible body lines must not trigger folds")
-      // once the TAIL group accumulates >= threshold foldable refs, the
-      // fold fires exactly once and the body shrinks
-      (0 until 4).foreach(i =>
-        Snapshots.commitAppend(spark, t2, Seq((993L + i, "t")).toDF("id", "tag")))
-      val after = Snapshots.versions(spark, t2)
-      assert(after.exists(v => !mid.contains(v) &&
+    // the trigger counts FOLDABLE references, not raw body lines: a
+    // delete-heavy body past the threshold in IRREDUCIBLE lines
+    // (singleton groups + delete refs) must not publish a useless
+    // maintenance version per append forever
+    val t2 = freshTable()
+    (0 until 3).foreach { i =>
+      Snapshots.commitAppend(spark, t2,
+        Seq((10L * i, s"g$i")).toDF("id", "tag"), 4)
+      Snapshots.eraseMoRCommit(spark, t2, "id", Seq(10L * i).toDF("k"))
+    }
+    // body: 3 singleton groups interleaved with 3 delete refs + the
+    // new tail each append — lines >= threshold 4, foldable ~0
+    val before = Snapshots.versions(spark, t2)
+    Snapshots.commitAppend(spark, t2, Seq((991L, "t")).toDF("id", "tag"), 4)
+    Snapshots.commitAppend(spark, t2, Seq((992L, "t")).toDF("id", "tag"), 4)
+    val mid = Snapshots.versions(spark, t2)
+    assert(mid.size == before.size + 2 &&
+      !mid.exists(v => !before.contains(v) &&
         Snapshots.isMaintenanceVersion(spark, t2, v)),
-        "a foldable tail past the threshold must auto-fold")
-      assert(Snapshots.read(spark, t2).select("id").as[Long].collect().toSet ==
-        (991L to 996L).toSet, "rows exact across deletes + folds")
-    } finally spark.conf.unset("graft.snapshot.foldThreshold")
+      "irreducible body lines must not trigger folds")
+    // once the TAIL group accumulates >= threshold foldable refs, the
+    // fold fires exactly once and the body shrinks
+    (0 until 4).foreach(i =>
+      Snapshots.commitAppend(spark, t2, Seq((993L + i, "t")).toDF("id", "tag"), 4))
+    val after = Snapshots.versions(spark, t2)
+    assert(after.exists(v => !mid.contains(v) &&
+      Snapshots.isMaintenanceVersion(spark, t2, v)),
+      "a foldable tail past the threshold must auto-fold")
+    assert(Snapshots.read(spark, t2).select("id").as[Long].collect().toSet ==
+      (991L to 996L).toSet, "rows exact across deletes + folds")
   }
 
   test("dataChange=false: every compaction flavor stamps the maintenance " +

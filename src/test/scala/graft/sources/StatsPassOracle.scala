@@ -78,12 +78,13 @@ object StatsPassOracle {
             r.getString(0).split('/').last -> ((stats, bstats, rc, nulls))
           }.toMap
       rels.map { r =>
+        val Array(path, sz) = r.split('\t')
         // a staged file absent from the grouped pass holds zero rows
-        val (cells, bcells, rc, ncells) = byName.getOrElse(
-          r.split('\t').head.split('/').last,
+        val (cells, bcells, rc, ncells) = byName.getOrElse(path.split('/').last,
           (Seq.empty[(String, ColStat)], Seq.empty[(String, BucketStat)], 0L,
             statsCols.map(_ -> 0L)))
-        Snapshots.renderLine(r, rc, cells, bcells, ncells)
+        Snapshots.renderLine(path, Some(sz.stripPrefix("sz=").toLong), Some(rc),
+          cells, bcells, ncells)
       }
     }
   }
